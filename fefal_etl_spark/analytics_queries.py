@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from fefal_etl_spark.datasets import load_table
 from fefal_etl_spark.queries import register
+from fefal_etl_spark.staging import source_fingerprint, stage_parquet
 
 # ==========================================================================
 # Funnel conversion: view → click → purchase, ordered by first occurrence
@@ -47,6 +48,7 @@ from fefal_etl_spark.queries import register
                       THEN 1 ELSE 0 END) AS BIGINT) AS n_view_click_purchase
     FROM stages
     """,
+    memo=True,
 )
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funnel analysis — strictly-ordered view→click→purchase conversion
@@ -103,6 +105,7 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE day_offset <= 7
     GROUP BY cohort_day, day_offset
     """,
+    memo=True,
 )
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention — users grouped by first-seen day, counted as active
@@ -157,6 +160,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE prev_type IS NOT NULL
     GROUP BY prev_type, next_type
     """,
+    memo=True,
 )
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-transition matrix — per-user lag() bigrams counted into a
@@ -200,6 +204,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     GROUP BY user_id, bucket
     """,
+    memo=True,
 )
 def q_events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series downsampling — per (user, hour) OHLC bars (the rollup a
@@ -253,6 +258,7 @@ def q_events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
                / ((1 - pow(0.5, len(l))) * 2.0), 6) AS DOUBLE) AS ewma10
     FROM wl
     """,
+    memo=True,
 )
 def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA smoothing (half-life decay over the trailing 10 events) — a
@@ -308,6 +314,7 @@ def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND v.ts >= p.ts - INTERVAL 30 MINUTE
     WHERE p.event_type = 'purchase' AND v.event_type = 'view'
     """,
+    memo=True,
 )
 def q_purchase_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join, exercised batch-side (SURVEY §2.11):
@@ -338,8 +345,6 @@ def _trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive them once per source fingerprint instead of re-joining per
     call (BFS warm 1.87 → 1.44 s at sf0.1; the staging parquet read also
     replaces the operators' internal edge persist cheaply)."""
-    from fefal_etl_spark.staging import source_fingerprint, stage_parquet
-
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") <= 6000
     )
@@ -393,6 +398,7 @@ def _trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM nodes CROSS JOIN n LEFT JOIN c2 ON c2.node = nodes.node)
     SELECT node, CAST(round(rank, 9) AS DOUBLE) AS rank FROM r2
     """,
+    memo=True,
 )
 def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative-propagation template #3 — PageRank (2 unrolled rounds,
@@ -431,6 +437,7 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM walk
     WHERE cur = 1
     """,
+    memo=True,
 )
 def q_hierarchy_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical/recursive query class: root-to-node ancestor paths over
@@ -492,6 +499,7 @@ def q_hierarchy_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN types t
     LEFT JOIN counts c ON g.h = c.h AND t.event_type = c.event_type
     """,
+    memo=True,
 )
 def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense time-grid gap filling — the resample step dashboards and
@@ -552,6 +560,7 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE day BETWEEN (SELECT lo FROM bounds) AND (SELECT hi FROM bounds)
     GROUP BY day
     """,
+    memo=True,
 )
 def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window COUNT(DISTINCT) — 7-day rolling active users per day,
@@ -644,6 +653,7 @@ def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
            (v IS NULL) AS was_gap
     FROM bracketed
     """,
+    memo=True,
 )
 def q_events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear interpolation of missing cells in a regular time series — the
@@ -729,6 +739,7 @@ def q_events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND v.ts <= p.ts
      AND v.ts >= p.ts - INTERVAL 30 MINUTE
     """,
+    memo=True,
 )
 def q_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join, batch-side twin: purchases
@@ -766,6 +777,7 @@ def q_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, path
     LIMIT 25
     """,
+    memo=True,
 )
 def q_event_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential path mining — top 3-step event paths across users (the
@@ -825,6 +837,7 @@ def q_event_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / count(*), 6) AS bounce_rate
     FROM per_session GROUP BY day
     """,
+    memo=True,
 )
 def q_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V82 — daily bounce rate: share of 30-min-gap sessions containing a
@@ -905,6 +918,7 @@ def q_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS segment
     FROM rfm CROSS JOIN cuts
     """,
+    memo=True,
 )
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V83 — RFM customer segmentation: recency/frequency/monetary per
@@ -991,6 +1005,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
            ks > 1.358 * sqrt(CAST(n0 + n1 AS DOUBLE) / (n0 * n1)) AS reject_05
     FROM d
     """,
+    memo=True,
 )
 def q_ks_test_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V91 — two-sample Kolmogorov–Smirnov test between the `value`
@@ -1122,6 +1137,7 @@ def q_ks_test_value(spark: SparkSession, sf_dir: str) -> DataFrame:
            est_n >= exact_n AS cm_ok
     FROM est
     """,
+    memo=True,
 )
 def q_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V92 — Count-Min sketch (d = 4 rows × w = 64 buckets, portable
@@ -1242,6 +1258,7 @@ def q_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(stddev_samp(r), 6) AS remainder_std
     FROM resid GROUP BY event_type, dow
     """,
+    memo=True,
 )
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V93 — classical additive decomposition of the per-type daily value
@@ -1328,6 +1345,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(CAST(v100 AS DOUBLE)) / 100.0, 6) AS plain_avg
     FROM seg GROUP BY event_type, d
     """,
+    memo=True,
 )
 def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V97 — time-weighted average price (TWAP) per (event_type, day)
@@ -1408,6 +1426,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(delta_min), 6) AS mean_min
     FROM conv
     """,
+    memo=True,
 )
 def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V98 — funnel latency distribution: minutes from each user's FIRST
@@ -1473,6 +1492,7 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, CAST(min(lvl) AS INT) AS level
     FROM bfs GROUP BY node
     """,
+    memo=True,
 )
 def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V99 — distributed breadth-first search: shortest hop distance
@@ -1539,6 +1559,7 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(SUM(dv9) / 1e9, 6) AS decayed_value
     FROM terms GROUP BY user_id
     """,
+    memo=True,
 )
 def q_decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V102 — exponentially time-decayed lifetime value per user:
@@ -1634,6 +1655,7 @@ def q_decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM means, base
     GROUP BY n_orders, sample_mean
     """,
+    memo=True,
 )
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V103 — Poisson bootstrap (Chamandy et al., Google 2012) 95% CI
@@ -1790,6 +1812,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / count(*), 6) AS session_cvr
     FROM per_sess
     """,
+    memo=True,
 )
 def q_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V107 — within-session funnel: conversion counted only when the

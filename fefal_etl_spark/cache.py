@@ -1,48 +1,87 @@
-"""Central registry for per-call persisted frames.
+"""Reuse policy: every piece of state the engine keeps across calls.
 
-Several registry queries persist an intermediate that feeds multiple
-downstream legs of the SAME returned plan (e.g. `quality_rank_blend`'s
-feature frame, `matryoshka_recall`'s per-dim corpus). The returned
-DataFrame is lazy, so the query function cannot unpersist before the
-caller materializes it — but in a long shared session (bench loops, the
-driver's full-registry sweep) those cached blocks would otherwise
-accumulate for the application lifetime: exactly the memory pressure
-behind the r2 late-suite OOM.
+**Per-call scratch** (``track`` / ``release_tracked`` /
+``tracking_scope``). A query that persists an intermediate feeding
+several legs of its OWN returned plan cannot unpersist it before the
+caller materializes that lazy plan, and in a long shared session those
+blocks would pile up for the application lifetime (the r2 late-suite
+OOM). Queries call ``track(df.persist())``; harness loops call
+``release_tracked()`` after materializing each result. Threaded
+harnesses use ``tracking_scope()`` so one thread's release never
+unpersists frames another thread's query still needs.
 
-Pattern: query functions call ``track(df.persist())``; harness loops call
-``release_tracked()`` after materializing each query's result. Named
-family caches that are REUSED across calls (`_COPURCHASE`, the pipeline
-star frames) keep their own release hooks — this registry is only for
-single-call scratch persists.
+**Memo store** (``memo`` / ``peek`` / ``put`` / ``release``). Every value
+reused ACROSS calls is an entry keyed by ``(applicationId, namespace,
+key, fingerprint)``:
 
-Concurrency (ADVICE r4): the registry is guarded by a lock, and
-harnesses that run queries on MULTIPLE THREADS should use
-:func:`tracking_scope` — a context manager giving each in-flight query
-its own tracking list and release handle, so one thread's
-``release_tracked()`` can never unpersist frames another thread's query
-still depends on. (Correctness was never at risk — Spark recomputes an
-unpersisted frame — but the persist's benefit was silently lost.)
-Without an active scope, ``track`` falls back to the process-global
-list, preserving the single-threaded harness contract.
+- ``applicationId`` is unique per SparkContext lifetime (``id(spark)`` is
+  reused by CPython after GC and could serve a dead session's frame). The
+  first insert under a new application drops every other application's
+  entries in all namespaces.
+- Values derived from source files carry ``staging.source_fingerprint``
+  of those files, so a rewritten fixture gets a fresh entry. If the
+  fingerprint raises ``OSError`` the value is built and not stored.
+  Content-addressed keys (uuid commit dirs, staged paths) need none.
+- Dropping an entry — ``release``, that sweep, LRU eviction (each
+  namespace is capped by a constant at its call site), or a new
+  fingerprint for its key — unpersists the DataFrames it owns, including
+  frames ``put`` while its ``memo`` build ran.
+- Hits and misses are counted per namespace (``counts``).
+
+Why the reuse is safe and what it saves. A memoized DataFrame is a lazy
+plan, not rows, unless its site persists it on purpose: every action
+still scans the parquet inputs.
+
+- ``plan``: builders declared ``@register(..., memo=True)``. Rebuilding
+  one re-ran hundreds of py4j constructions and an analysis pass for an
+  identical plan — 41 s of the 124 s warm bench at sf0.1. Eligible only
+  if the second build launches zero Spark jobs and writes nothing, so
+  convergence loops, scenario/sink roundtrips and streams are not
+  declared. Scratch frames the builder tracked are re-persisted at their
+  storage level and re-tracked on every hit.
+- ``table``: ``spark.read.parquet`` costs ~110 ms of driver time per call
+  (schema inference, listing, DataSource resolution).
+- ``commit_schema`` / ``read_plan``: table data files sit in
+  uuid-addressed, write-once commit dirs, so a commit's schema and a read
+  plan over a file list never change. A known schema cuts reader creation
+  from ~180 ms to ~70 ms per commit group at sf0.1.
+- ``staged_read``: staged paths are content-addressed and immutable;
+  re-reading one costs ~0.3-0.4 s of listing and footers at sf0.1.
+- ``pipeline`` / ``pipeline_full``: the pipeline queries share one EP2
+  classify chain (~8 jobs each unshared) and its persisted star frames
+  (23 warm jobs → 8 on the full-groups aggregation).
 """
 
 from __future__ import annotations
 
 import threading
+from collections import Counter, OrderedDict
 from contextlib import contextmanager
+from typing import Any, Callable, Hashable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
 _SCOPED = threading.local()  # .stack: list[list[DataFrame]] per thread
+_BUILDS = threading.local()  # .stack: frames owned by memo builds in flight
+
+# namespace -> (application, key) -> (fingerprint, value, owned frames)
+_MEMO: dict[str, OrderedDict] = {}
+_HITS: Counter = Counter()
+_MISSES: Counter = Counter()
+_LIVE_APP: str | None = None
+
+
+def _stack(local: threading.local) -> list:
+    if not hasattr(local, "stack"):
+        local.stack = []
+    return local.stack
 
 
 def _current_list() -> list[DataFrame]:
-    stack = getattr(_SCOPED, "stack", None)
-    if stack:
-        return stack[-1]
-    return _TRACKED
+    stack = _stack(_SCOPED)
+    return stack[-1] if stack else _TRACKED
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -54,9 +93,8 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def _drain(frames: list[DataFrame]) -> None:
-    while frames:
-        df = frames.pop()
+def _drain(frames: Iterable[DataFrame]) -> None:
+    for df in frames:
         try:
             df.unpersist()
         except Exception:
@@ -75,15 +113,11 @@ def release_tracked() -> None:
 
 @contextmanager
 def tracking_scope():
-    """Scope tracking to one query invocation: ``with tracking_scope():``
-    collects every ``track()`` on this thread into a private list and
-    unpersists exactly those frames on exit — the thread-safe form of
-    the track/release_tracked pair for concurrent harnesses."""
+    """Collect every ``track()`` on this thread into a private list and
+    unpersist exactly those frames on exit."""
     frames: list[DataFrame] = []
     with _LOCK:
-        if not hasattr(_SCOPED, "stack"):
-            _SCOPED.stack = []
-        _SCOPED.stack.append(frames)
+        _stack(_SCOPED).append(frames)
     try:
         yield frames
     finally:
@@ -92,3 +126,102 @@ def tracking_scope():
             pending = list(frames)
             frames.clear()
         _drain(pending)
+
+
+def _lookup(app: str, namespace: str, key: Hashable, fp: Hashable):
+    with _LOCK:
+        entries = _MEMO.get(namespace, {})
+        entry = entries.get((app, key))
+        if entry is not None and entry[0] == fp:
+            entries.move_to_end((app, key))
+            _HITS[namespace] += 1
+            return True, entry[1]
+        _MISSES[namespace] += 1
+        return False, None
+
+
+def _insert(app, namespace, key, fp, value, frames, cap: int) -> None:
+    global _LIVE_APP
+    dropped = []
+    with _LOCK:
+        if app != _LIVE_APP:
+            for entries in _MEMO.values():
+                for k in [k for k in entries if k[0] != app]:
+                    dropped.append(entries.pop(k))
+            _LIVE_APP = app
+        entries = _MEMO.setdefault(namespace, OrderedDict())
+        if (app, key) in entries:
+            dropped.append(entries.pop((app, key)))
+        entries[(app, key)] = (fp, value, tuple(frames))
+        while len(entries) > cap:
+            dropped.append(entries.popitem(last=False)[1])
+    _drain(f for entry in dropped for f in entry[2])
+
+
+def memo(
+    spark: SparkSession,
+    namespace: str,
+    key: Hashable,
+    build: Callable[[], Any],
+    *,
+    cap: int,
+    fingerprint: Callable[[], Hashable] | None = None,
+    frames: Callable[[Any], Iterable[DataFrame]] | None = None,
+) -> Any:
+    """The value under ``(application, namespace, key, fingerprint())``;
+    on a miss ``build()`` it and store it, owning ``frames(value)``."""
+    app = spark.sparkContext.applicationId
+    try:
+        fp = fingerprint() if fingerprint is not None else None
+    except OSError:  # the source cannot be keyed: build, store nothing
+        with _LOCK:
+            _MISSES[namespace] += 1
+        return build()
+    hit, value = _lookup(app, namespace, key, fp)
+    if hit:
+        return value
+    held: list[DataFrame] = []
+    _stack(_BUILDS).append(held)
+    try:
+        value = build()
+    finally:
+        _BUILDS.stack.pop()
+    owned = [*(frames(value) if frames is not None else ()), *held]
+    _insert(app, namespace, key, fp, value, owned, cap)
+    return value
+
+
+def peek(spark: SparkSession, namespace: str, key: Hashable) -> Any:
+    """The value stored under ``key`` (no fingerprint), or None."""
+    return _lookup(spark.sparkContext.applicationId, namespace, key, None)[1]
+
+
+def put(spark: SparkSession, namespace: str, key: Hashable, value: Any, *,
+        cap: int, frames: Iterable[DataFrame] = ()) -> None:
+    """Store ``value`` under ``key`` (no fingerprint), owning ``frames``;
+    the ``memo`` build in flight on this thread, if any, owns them too."""
+    frames = tuple(frames)
+    if _stack(_BUILDS):
+        _BUILDS.stack[-1].extend(frames)
+    _insert(spark.sparkContext.applicationId, namespace, key, None, value, frames, cap)
+
+
+def release(namespace: str | None = None) -> None:
+    """Drop every entry of ``namespace`` (default: all), unpersisting the
+    frames they own."""
+    with _LOCK:
+        names = list(_MEMO) if namespace is None else [namespace]
+        dropped = [e for n in names for e in _MEMO.pop(n, {}).values()]
+    _drain(f for entry in dropped for f in entry[2])
+
+
+def counts(namespace: str) -> tuple[int, int]:
+    """(hits, misses) of ``namespace`` since the process started."""
+    with _LOCK:
+        return _HITS[namespace], _MISSES[namespace]
+
+
+def keys(namespace: str) -> list[tuple[str, Hashable]]:
+    """The ``(application, key)`` pairs stored in ``namespace``."""
+    with _LOCK:
+        return list(_MEMO.get(namespace, ()))

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fefal_etl_spark import cache
 from fefal_etl_spark.datasets import fan_table, load_table
 from fefal_etl_spark.llm.dedup import (
     exact_dup_groups,
@@ -38,6 +39,7 @@ from fefal_etl_spark.llm.text_analysis import (
     winnow_fingerprints,
 )
 from fefal_etl_spark.queries import register
+from fefal_etl_spark.staging import source_fingerprint, stage_parquet, staging_root
 
 # --------------------------------------------------------------------------
 # Corpus with planted duplicates (shared by dedup queries)
@@ -63,10 +65,6 @@ _CORPUS_SQL = """
 # make assignment ties engine-dependent).
 _PLANT_NS_FLOOR = 1_000_000
 
-# per-(sf_dir, table, col) max real id, probed once per process from
-# parquet footer stats (driver-side metadata read, no Spark job)
-_NS_MAX_MEMO: dict[tuple[str, str, str], int] = {}
-
 
 def _assert_plant_headroom(
     spark: SparkSession, sf_dir: str, table: str, col: str
@@ -75,9 +73,8 @@ def _assert_plant_headroom(
 
     import pyarrow.parquet as _pq
 
-    key = (_os.path.abspath(sf_dir), table, col)
-    mx = _NS_MAX_MEMO.get(key)
-    if mx is None:
+    def probe() -> int:
+        # parquet footer stats: a driver-side metadata read, no Spark job
         path = _os.path.join(sf_dir, f"{table}.parquet")
         if _os.path.isfile(path):
             meta = _pq.ParquetFile(path).metadata
@@ -87,14 +84,18 @@ def _assert_plant_headroom(
                 for g in range(meta.num_row_groups)
             ]
             if groups and all(s is not None and s.has_min_max for s in groups):
-                mx = max(s.max for s in groups)
-        if mx is None:  # directory source / no footer stats: one agg
-            mx = (
-                load_table(spark, sf_dir, table)
-                .agg(F.max(col))
-                .first()[0]
-            ) or 0
-        _NS_MAX_MEMO[key] = mx
+                return max(s.max for s in groups)
+        # directory source / no footer stats: one agg
+        return load_table(spark, sf_dir, table).agg(F.max(col)).first()[0] or 0
+
+    mx = cache.memo(
+        spark,
+        "ns_max",
+        (_os.path.abspath(sf_dir), table, col),
+        probe,
+        cap=64,
+        fingerprint=lambda: source_fingerprint(sf_dir, table),
+    )
     if mx >= _PLANT_NS_FLOOR:
         raise ValueError(
             f"planted-duplicate namespace collision: max {table}.{col} "
@@ -105,35 +106,24 @@ def _assert_plant_headroom(
         )
 
 
-# per-sf_dir corpus row count (static test fixtures), probed once per session
-_CORPUS_N: dict[str, int] = {}
-
-
-_CORPUS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents ∪ planted near-dups in ONE scan: the union-of-two-scans
     formulation reads the text column twice; exploding an original/planted
     struct pair per row is a narrow Expand over a single scan (halves
     corpus IO for every dedup query; semantics identical to the oracle's
-    UNION ALL).
-
-    The built frame is memoized per (application, sf_dir, source
-    fingerprint): every dedup/text query calls this, and rebuilding the
-    lineage re-lists the parquet dir on the driver (~0.2 s per call at
-    sf0.1). The fingerprint key keeps a regenerated source from being
-    served a stale plan."""
-    from fefal_etl_spark.staging import source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    UNION ALL). Memoized: every dedup/text query calls this, and a
+    rebuild re-lists the parquet dir on the driver (~0.2 s at sf0.1)."""
+    return cache.memo(
+        spark,
+        "corpus",
         sf_dir,
-        source_fingerprint(sf_dir, "documents"),
+        lambda: _build_corpus(spark, sf_dir),
+        cap=64,
+        fingerprint=lambda: source_fingerprint(sf_dir, "documents"),
     )
-    memo = _CORPUS_MEMO.get(key)
-    if memo is not None:
-        return memo
+
+
+def _build_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     _assert_plant_headroom(spark, sf_dir, "documents", "doc_id")
     docs = fan_table(spark, sf_dir, "documents").select("doc_id", "text")
     orig = F.struct(F.col("doc_id"), F.col("text"))
@@ -147,11 +137,7 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_table repartitions BEFORE the per-doc heavy lifting (shingling,
     # banded levenshtein DP, prefix blocks) — see datasets.fan_table for
     # the measured rationale (3.7× on levenshtein_neardup).
-    out = docs.select(F.explode(rows).alias("r")).select(
-        "r.doc_id", "r.text"
-    )
-    _CORPUS_MEMO[key] = out
-    return out
+    return docs.select(F.explode(rows).alias("r")).select("r.doc_id", "r.text")
 
 
 # --------------------------------------------------------------------------
@@ -183,7 +169,6 @@ def _similarity_frames(
     ``<stage>/sim_{tokens,df}-<fingerprint(documents)>`` — regenerated
     source data invalidates them automatically."""
     from fefal_etl_spark.llm.dedup import shingles
-    from fefal_etl_spark.staging import source_fingerprint, stage_parquet
 
     fp = source_fingerprint(sf_dir, "documents")
     tokens = stage_parquet(
@@ -220,7 +205,6 @@ def _containment_frames(
     staged-parquet reads. ``max_df`` is part of the stage key — a
     different pruning bound is a different index."""
     from fefal_etl_spark.llm.dedup import containment_rank_index
-    from fefal_etl_spark.staging import source_fingerprint, stage_parquet
 
     fp = source_fingerprint(sf_dir, "documents")
     tokens, term_df = _similarity_frames(spark, sf_dir)
@@ -274,6 +258,7 @@ _SQL_STOP_IN = ", ".join(f"'{s}'" for s in STOPWORDS)
            CASE WHEN nw > 0 THEN CAST(n_chars - (nw - 1) AS DOUBLE) / nw ELSE 0.0 END AS mean_word_len
     FROM t
     """,
+    memo=True,
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — quality-scoring features: counts + ratios, one narrow pass."""
@@ -311,6 +296,7 @@ def _sql_lang_scores() -> str:
                 ELSE 'und' END AS pred_lang
     FROM s
     """,
+    memo=True,
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — marker-stopword language ID (cheap router heuristic)."""
@@ -368,6 +354,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
                           1, 15))::BIGINT % 10000
           < CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 10000 ELSE 2500 END
     """,
+    memo=True,
 )
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone — the full pretraining-curation chain as one lazy DAG:
@@ -414,6 +401,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
            (l.dup_line_frac <= 0.3 AND t.top_word_frac <= 0.2) AS keep
     FROM l LEFT JOIN t ON l.doc_id = t.doc_id
     """,
+    memo=True,
 )
 def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — Gopher-style repetition filters: duplicate-line fraction +
@@ -445,6 +433,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bucket < CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 10000
                              ELSE 2500 END
     """,
+    memo=True,
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling for corpus curation: keep 50% of
@@ -480,6 +469,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(doc_id) AS BIGINT) AS sum_ids
     FROM b GROUP BY 1
     """,
+    memo=True,
 )
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leak-proof train/eval split: side membership is a pure function of
@@ -529,6 +519,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, unnest(list_distinct(mins)) AS fp FROM f
     """,
+    memo=True,
 )
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — winnowing rolling-hash fingerprints (word 3-grams, window 4),
@@ -552,6 +543,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_copies
     FROM corpus GROUP BY 1
     """,
+    memo=True,
 )
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 exact — md5-fingerprint duplicate groups (hash groupBy)."""
@@ -627,16 +619,22 @@ _SQL_MINHASH = _sql_minhash()
     JOIN sizes zb ON zb.doc_id = i.id_b
     WHERE CAST(i.n_inter AS DOUBLE) / (za.n_sh + zb.n_sh - i.n_inter) >= 0.5
     """,
+    memo=True,
 )
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 MinHash+LSH — shingle → 16 minhashes → 4×4 bands → bucket join →
     exact-Jaccard verify ≥ 0.5. Must recover the planted near-dup pairs."""
-    # corpus-size gate memoized per sf_dir: the verify-stage semi-filter
-    # decision needs one count, and re-probing on every invocation costs an
-    # extra job per call (~0.2 s of the warm bench budget)
-    n = _CORPUS_N.get(sf_dir)
-    if n is None:
-        n = _CORPUS_N[sf_dir] = _corpus(spark, sf_dir).count()
+    # corpus-size gate memoized: the verify-stage semi-filter decision
+    # needs one count, and re-probing on every invocation costs an extra
+    # job per call (~0.2 s of the warm bench budget)
+    n = cache.memo(
+        spark,
+        "corpus_n",
+        sf_dir,
+        lambda: _corpus(spark, sf_dir).count(),
+        cap=64,
+        fingerprint=lambda: source_fingerprint(sf_dir, "documents"),
+    )
     return minhash_lsh_neardup(
         _corpus(spark, sf_dir), "doc_id", "text",
         shingle_n=3, num_hashes=16, rows_per_band=4, threshold=0.5,
@@ -694,11 +692,6 @@ def q_incremental_dedup_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fefal_etl_spark.llm.dedup import shingles
     from fefal_etl_spark.llm.incremental_dedup import LshDedupIndex
-    from fefal_etl_spark.staging import (
-        source_fingerprint,
-        stage_parquet,
-        staging_root,
-    )
 
     corpus = _corpus(spark, sf_dir)
     existing = corpus.filter(F.col("doc_id") < 1000000)
@@ -782,11 +775,6 @@ def q_index_compaction_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fefal_etl_spark.llm.dedup import shingles
     from fefal_etl_spark.llm.incremental_dedup import LshDedupIndex
-    from fefal_etl_spark.staging import (
-        source_fingerprint,
-        stage_parquet,
-        staging_root,
-    )
 
     corpus = _corpus(spark, sf_dir)
     existing = corpus.filter(F.col("doc_id") < 1000000)
@@ -849,6 +837,7 @@ def q_index_compaction_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes zb ON zb.doc_id = i.id_b
     WHERE CAST(i.n_inter AS DOUBLE) / (za.n_sh + zb.n_sh - i.n_inter) >= 0.2
     """,
+    memo=True,
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 n-gram Jaccard — exhaustive shingle-join near-dup (no LSH): every
@@ -917,6 +906,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS simhash
     FROM bitsums GROUP BY doc_id
     """,
+    memo=True,
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 SimHash — 60-bit per-bit-majority fingerprint per document.
@@ -979,6 +969,7 @@ _SQL_SPANS = f"""
     {_SQL_SPANS}
     SELECT doc_id, span_start, span_end, span_words, n_windows FROM spans
     """,
+    memo=True,
 )
 def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 — substring-level duplicate spans (ExactSubstr dedup, Lee et al.
@@ -1025,6 +1016,7 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM corpus) w2
     LEFT JOIN agg USING (doc_id)
     """,
+    memo=True,
 )
 def q_substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 — the ExactSubstr rewrite stage: documents with every duplicated
@@ -1063,6 +1055,7 @@ def q_substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE list_dot_product(a.v, b.v) /
           (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.9
     """,
+    memo=True,
 )
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 embedding-cosine near-dup — sign-LSH candidate buckets, exact
@@ -1102,6 +1095,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM sims) t
     WHERE rk <= 10
     """,
+    memo=True,
 )
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 — brute-force cosine top-10 for 3 broadcast query vectors."""
@@ -1137,6 +1131,7 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE list_dot_product(a.v, b.v) /
           (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.0
     """,
+    memo=True,
 )
 def q_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 scale path — sign-LSH bucketed candidate pairs with exact-cosine
@@ -1197,6 +1192,7 @@ def _emb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS recall_ok, TRUE AS precision_ok
     FROM p
     """,
+    memo=True,
 )
 def q_gaussian_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 recall hardening — seeded-Gaussian multi-table sign-LSH
@@ -1275,6 +1271,7 @@ def q_gaussian_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
               PARTITION BY vec_id ORDER BY d2, centroid_id) AS rk FROM d) t
     WHERE rk = 1
     """,
+    memo=True,
 )
 def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 scale path — IVF coarse quantization: nearest-of-8-centroids
@@ -1331,6 +1328,7 @@ def _sql_kmeans_round(assign_name: str, cent_in: str, cent_out: str) -> str:
     )
     SELECT vec_id, CAST(cid AS BIGINT) AS centroid_id FROM final
     """,
+    memo=True,
 )
 def q_kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative algorithm template — Lloyd's k-means (k=4, 2 fixed rounds,
@@ -1382,6 +1380,7 @@ def q_kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM sims) t
     WHERE rk <= 5
     """,
+    memo=True,
 )
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 scale path end-to-end — two-level IVF ANN: probe the 2 nearest of
@@ -1417,7 +1416,6 @@ def q_incremental_ann_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from fefal_etl_spark.llm.incremental_ann import IvfAnnIndex
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
 
     emb = load_table(spark, sf_dir, "embeddings")
     existing = emb.filter(F.col("vec_id") % 20 != 0)
@@ -1506,11 +1504,6 @@ def q_ivf_retrain_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fefal_etl_spark.llm.incremental_ann import IvfAnnIndex
     from fefal_etl_spark.llm.similarity import kmeans_centroids
-    from fefal_etl_spark.staging import (
-        source_fingerprint,
-        stage_parquet,
-        staging_root,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     existing = emb.filter(F.col("vec_id") % 20 != 0)
@@ -1612,6 +1605,7 @@ register(
            CAST(ascii(substr(text, 1, 1)) AS BIGINT) AS first_byte
     FROM documents
     """,
+    memo=True,
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 — binary media column + Arrow-batched mapInPandas feature
@@ -1640,6 +1634,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents
     ) t GROUP BY media_id
     """,
+    memo=True,
 )
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 — REAL image decode end-to-end: deterministic BMPs are encoded
@@ -1672,6 +1667,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT doc_id, unnest(range(0, 36)) AS k FROM documents) g
     ) t GROUP BY media_id
     """,
+    memo=True,
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 — decode → nearest-neighbor resize (4×3) → re-encode → decode:
@@ -1704,6 +1700,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents
     ) t GROUP BY media_id
     """,
+    memo=True,
 )
 def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 / round-6 (VERDICT r5 item 5) — REAL PNG decode end-to-end:
@@ -1765,6 +1762,7 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(nll), 6) AS mean_nll
     FROM scored GROUP BY doc_id
     """,
+    memo=True,
 )
 def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V57 — interpolated bigram LM scoring (Jelinek-Mercer λ=0.75): the
@@ -1797,6 +1795,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT pair, CAST(sum(freq) AS BIGINT) AS n
     FROM pairs GROUP BY pair ORDER BY n DESC, pair LIMIT 50
     """,
+    memo=True,
 )
 def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V55 — the counting step of BPE tokenizer training: adjacent
@@ -1841,6 +1840,7 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON sb.doc_id = i.id_b
     WHERE i.n_inter * 1000 >= 900 * least(sa.n_sh, sb.n_sh)
     """,
+    memo=True,
 )
 def q_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V56 — asymmetric containment dedup C(A,B) = |A∩B| / min(|A|,|B|)
@@ -1907,6 +1907,7 @@ def q_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON sb.doc_id = i.id_b
     WHERE i.n_inter * 1000 >= 800 * (sa.n_sh + sb.n_sh - i.n_inter)
     """,
+    memo=True,
 )
 def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V53 — prefix-filtered EXACT set-similarity self-join (PPJoin family):
@@ -1919,8 +1920,6 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fefal_etl_spark.llm.dedup import ppjoin_pairs
 
     from pyspark.sql.window import Window
-
-    from fefal_etl_spark.staging import source_fingerprint, stage_parquet
 
     tokens, term_df = _similarity_frames(spark, sf_dir)
     # Stage the threshold-independent frequency-ranked shingle table too
@@ -1987,6 +1986,7 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(string_agg(w, ' ' ORDER BY pos)) AS chunk_md5
     FROM chunked GROUP BY doc_id, chunk_id
     """,
+    memo=True,
 )
 def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V52 — content-defined chunking (Rabin/FastCDC family, word
@@ -2022,6 +2022,7 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) t
     GROUP BY media_id, frame_id
     """,
+    memo=True,
 )
 def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 audio leg (V49) — REAL RIFF/PCM16 decode end-to-end: deterministic
@@ -2045,6 +2046,7 @@ def q_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents
     ) t
     """,
+    memo=True,
 )
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 — frame-sampling fan-out: one row per sampled payload offset."""
@@ -2084,6 +2086,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored) t
     WHERE rk <= 3
     """,
+    memo=True,
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — per-document top-3 TF-IDF terms: explode→(doc,term) counts,
@@ -2118,7 +2121,6 @@ def _staged_cosine_index(spark: SparkSession, sf_dir: str):
         sparse_cosine_index,
         sparse_cosine_weights,
     )
-    from fefal_etl_spark.staging import source_fingerprint, stage_parquet
 
     fp = source_fingerprint(sf_dir, "documents")
     weights = stage_parquet(
@@ -2188,6 +2190,7 @@ def _staged_cosine_index(spark: SparkSession, sf_dir: str):
                 / sqrt(CAST(na.norm2 AS DOUBLE) * CAST(nb.norm2 AS DOUBLE)),
                 6) >= 0.6
     """,
+    memo=True,
 )
 def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 lexical — DF-pruned inverted-index cosine pairs
@@ -2272,6 +2275,7 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rk AS BIGINT) AS rk, cos_sim
     FROM ranked WHERE rk <= 3
     """,
+    memo=True,
 )
 def q_sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 lexical — per-document sparse-cosine k-NN
@@ -2318,6 +2322,7 @@ from fefal_etl_spark.llm.curation import EMAIL_RE, PHONE_RE  # noqa: E402
                           '{PHONE_RE}', '<PHONE>', 'g') AS text_scrubbed
     FROM seeded
     """,
+    memo=True,
 )
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — PII redaction pass (emails + phone numbers → placeholder
@@ -2376,6 +2381,7 @@ _SQL_SEMDEDUP_COS = """list_dot_product(a.__va, b.__vb) /
       ON a.cid = b.cid AND a.vec_id < b.vec_id
     WHERE round({_SQL_SEMDEDUP_COS}, 9) >= 0.95
     """,
+    memo=True,
 )
 def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 — SemDeDup-style semantic dedup: k-means clusters the embedding
@@ -2570,6 +2576,7 @@ def q_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g_tr JOIN g_ev USING (g)
     GROUP BY doc_id
     """,
+    memo=True,
 )
 def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — benchmark decontamination: training docs sharing any word
@@ -2629,6 +2636,7 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c
     WHERE array_to_string(words[chunk_pos:chunk_pos+49], ' ') <> ''
     """,
+    memo=True,
 )
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — context-window chunking: overlapping 50-word chunks at stride
@@ -2663,6 +2671,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(s % 4096 AS BIGINT) AS bin_offset
     FROM c
     """,
+    memo=True,
 )
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — deterministic contiguous sequence packing: docs → fixed
@@ -2709,6 +2718,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS q_str
     FROM s
     """,
+    memo=True,
 )
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 — symmetric per-vector int8 quantization
@@ -2746,6 +2756,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ELSE 0.0 END, 6) AS z
     FROM documents d JOIN stats USING (source)
     """,
+    memo=True,
 )
 def q_quality_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — per-source z-score standardization of doc length
@@ -2794,6 +2805,7 @@ def q_quality_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sums sj ON p.j = sj.i
     CROSS JOIN nn
     """,
+    memo=True,
 )
 def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 — distributed corpus covariance of the embedding column
@@ -2827,6 +2839,7 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, source FROM ranked WHERE rk <= 15
     """,
+    memo=True,
 )
 def q_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — deterministic per-group cap (llm/sampling.py::per_group_cap):
@@ -2882,6 +2895,7 @@ def q_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE rn = 1
     GROUP BY doc_id
     """,
+    memo=True,
 )
 def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 — passage-level exact dedup (llm/dedup.py::segment_dedup), the
@@ -2917,6 +2931,7 @@ def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(bucket AS HUGEINT) * w_tot * n_g
           < CAST(10000 AS HUGEINT) * t_tgt * w_g
     """,
+    memo=True,
 )
 def q_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — α=0.5 temperature domain mixing (llm/sampling.py::
@@ -3037,6 +3052,7 @@ def q_dedup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(min(doc_id) AS BIGINT) AS first_doc
     FROM s GROUP BY shard
     """,
+    memo=True,
 )
 def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — deterministic training-shard layout (llm/sampling.py::
@@ -3090,6 +3106,7 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(v) AS DOUBLE) / count(*) AS coverage
     FROM j GROUP BY doc_id
     """,
+    memo=True,
 )
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — corpus-relative vocabulary coverage (llm/text_analysis.py::
@@ -3123,6 +3140,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(log2(sum(c)) - sum(c * log2(c)) / sum(c), 6) AS entropy
     FROM pw GROUP BY doc_id
     """,
+    memo=True,
 )
 def q_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — lexical diversity (llm/text_analysis.py::token_diversity):
@@ -3226,6 +3244,7 @@ def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM pre WHERE prk <= 20) t
     WHERE rk <= 5
     """,
+    memo=True,
 )
 def q_quantized_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 — int8-prefiltered ANN with float re-rank
@@ -3273,6 +3292,7 @@ def q_quantized_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(nll), 6) AS mean_nll
     FROM scored GROUP BY doc_id
     """,
+    memo=True,
 )
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 — corpus-unigram negative-log-likelihood scoring
@@ -3310,6 +3330,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
                   + percent_rank() OVER (ORDER BY ttr)) / 3, 6) AS blend
     FROM feats
     """,
+    memo=True,
 )
 def q_quality_rank_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V58 — rank-normalized quality fusion: three signals (chars, words,
@@ -3408,6 +3429,7 @@ def q_quality_rank_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) FILTER (WHERE doc_id % 13 = 7) AS BIGINT)
     FROM fps
     """,
+    memo=True,
 )
 def q_tombstone_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V59 — right-to-erasure tombstone propagation: a tombstone key set is
@@ -3453,6 +3475,7 @@ def q_tombstone_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
            array_to_string(list_sort(list(pos)), ',') AS positions
     FROM words GROUP BY term, doc_id
     """,
+    memo=True,
 )
 def q_positional_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V60 — positional inverted-index build: (term, doc, tf, sorted
@@ -3518,6 +3541,7 @@ def q_positional_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN n_tot t CROSS JOIN m_tot m
     ORDER BY pmi DESC, b.w1, b.w2 LIMIT 50
     """,
+    memo=True,
 )
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V66 — PMI collocation mining (the word2vec phrase-pass statistic):
@@ -3562,6 +3586,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'tail' END AS bucket
     FROM doc_scores d CROSS JOIN cuts c
     """,
+    memo=True,
 )
 def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V69 — CCNet-style perplexity bucketing: documents split into
@@ -3633,6 +3658,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     WHERE (kind = 'pos' AND rk <= 1) OR (kind = 'neg' AND rk <= 2)
     """,
+    memo=True,
 )
 def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V71 — contrastive pair mining for embedding fine-tuning: nearest
@@ -3664,6 +3690,7 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, weight, sample_key, rk FROM ranked WHERE rk <= 100
     """,
+    memo=True,
 )
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V76 — deterministic weighted sampling (Efraimidis-Spirakis A-ES):
@@ -3712,6 +3739,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / (SELECT count(*) FROM truth), 6) AS recall_at_10
     FROM dims dm LEFT JOIN overlap o ON dm.d = o.d
     """,
+    memo=True,
 )
 def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V80 — Matryoshka-truncation quality audit: recall@10 of cosine
@@ -3934,6 +3962,7 @@ def _levenshtein_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS r2
     FROM top
     """,
+    memo=True,
 )
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V88 — Zipf's-law fit over the corpus vocabulary: OLS slope /
@@ -4004,6 +4033,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM words w JOIN ratio ON w.b = ratio.b
     GROUP BY w.doc_id
     """,
+    memo=True,
 )
 def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V90 — DSIR-style importance weights (Xie et al. 2023, "Data
@@ -4095,6 +4125,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(max(gpr), 6) AS max_global_pr
     FROM ranked GROUP BY source, local_decile
     """,
+    memo=True,
 )
 def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V95 — cross-source quantile normalization: maps each source's local
@@ -4173,6 +4204,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM fused) t
     WHERE frk <= 20
     """,
+    memo=True,
 )
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V101 — reciprocal-rank fusion (Cormack et al. 2009) across the
@@ -4230,6 +4262,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS q25_ok, TRUE AS q50_ok, TRUE AS q75_ok
     FROM documents GROUP BY source
     """,
+    memo=True,
 )
 def q_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V105 — the promised 100 TB path for `quantile_normalize`, made
@@ -4313,6 +4346,7 @@ def q_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id
     HAVING count(*) = 3
     """,
+    memo=True,
 )
 def q_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V106 — conjunctive (AND) boolean retrieval: documents containing
@@ -4402,6 +4436,7 @@ def q_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(rk AS INT) AS rk, doc_id, score
     FROM ranked WHERE rk <= 10
     """,
+    memo=True,
 )
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-8 — BM25 ranked retrieval (Robertson/Spärck Jones; the
@@ -4529,6 +4564,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            abs(j_est - j_exact) <= 0.3 AS mh_ok
     FROM joined
     """,
+    memo=True,
 )
 def q_minhash_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V108 — MinHash Jaccard ESTIMATION at the source level: each

@@ -14,11 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fefal_etl_spark import cache
 from fefal_etl_spark.datasets import load_table
 from fefal_etl_spark.plans.config import GroupSpec, PipelineConfig
 from fefal_etl_spark.plans.pipeline import run_pipeline
 from fefal_etl_spark.plans.star import build_star
 from fefal_etl_spark.queries import register, sql_norm, sql_strip_prefixes
+from fefal_etl_spark.staging import source_fingerprint
 
 YEAR = 2025
 
@@ -98,66 +100,30 @@ def _run(spark: SparkSession, sf_dir: str):
     return run_pipeline(_survey(spark, sf_dir), _registry(spark, sf_dir), _config())
 
 
-# The three pipeline queries share one EP2 transform + EP3 star build. Without
-# sharing, each registry entry re-runs the whole classify chain (~8 chained
-# jobs each — the round-1 bench's single worst wall-time item). The classified
-# frame is persisted once per (application, sf_dir) and the star dict derived
-# from it; `release_pipeline_cache` frees the blocks for long-lived sessions.
-#
-# Keyed by ``applicationId`` (unique per SparkContext lifetime), NOT
-# ``id(spark)``: CPython reuses object ids after GC, so an id-keyed cache in
-# a long-lived process could serve a dead session's persisted frame to a new
-# one (VERDICT r2 "what's wrong" item 5). On first use under a new
-# application, entries owned by previous applications are dropped and their
-# blocks released.
-_SHARED: dict[tuple[str, str], tuple] = {}
-
-
 def _shared(spark: SparkSession, sf_dir: str):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _SHARED:
-        stale = [k for k in _SHARED if k[0] != app_id]
-        if stale:
-            from fefal_etl_spark.plans.star import release_star_cache
+    """The classified EP2 frame and its star dict, persisted once per
+    (application, sf_dir, customer bytes) and shared by the pipeline
+    queries."""
 
-            for k in stale:
-                res, star_ = _SHARED.pop(k)
-                for df_ in [res.frame, *(star_ or {}).values()]:
-                    try:
-                        df_.unpersist()
-                    except Exception:
-                        pass
-            release_star_cache(app_id=app_id)
+    def build():
         res = _run(spark, sf_dir)
         res.frame = res.frame.persist()
-        # persist the star frames too (round 12): they are fact/dim
-        # outputs a customer-count in size, and the five consumer
-        # queries otherwise re-derive each fact from the classified
-        # frame per invocation — measured 23 warm jobs → 8 on the
-        # full-groups aggregation. Same lifetime/eviction as res.frame.
-        star = {k_: df_.persist() for k_, df_ in build_star(res).items()}
-        _SHARED[key] = (res, star)
-    return _SHARED[key]
+        star = {k: df.persist() for k, df in build_star(res).items()}
+        return res, star
+
+    return cache.memo(
+        spark,
+        "pipeline",
+        sf_dir,
+        build,
+        cap=4,
+        fingerprint=lambda: source_fingerprint(sf_dir, "customer"),
+        frames=_pipeline_frames,
+    )
 
 
-def release_pipeline_cache() -> None:
-    """Unpersist every cached pipeline frame (bench/oracle-loop hygiene)
-    — BOTH the EP1 `_SHARED` cache and the config-fingerprinted
-    `_SHARED_FULL` twin (review r11: clearing only one leaked the
-    other's persisted blocks and left it serving star frames whose
-    underlying persist was just released)."""
-    from fefal_etl_spark.plans.star import release_star_cache
-
-    for cache in (_SHARED, _SHARED_FULL):
-        for entry in cache.values():
-            for df_ in [entry[0].frame, *(entry[1] or {}).values()]:
-                try:
-                    df_.unpersist()
-                except Exception:
-                    pass
-        cache.clear()
-    release_star_cache()
+def _pipeline_frames(entry) -> list[DataFrame]:
+    return [entry[0].frame, *entry[1].values()]
 
 
 # --------------------------------------------------------------------------
@@ -234,6 +200,7 @@ _PIPE_CTE = f"""
     SELECT status, CAST(count(*) AS BIGINT) AS n
     FROM classified GROUP BY status
     """,
+    memo=True,
 )
 def q_pipeline_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 end-to-end — the valid/duplicate/unmatched/blank accounting the
@@ -254,6 +221,7 @@ def q_pipeline_status(spark: SparkSession, sf_dir: str) -> DataFrame:
            pct AS percentagem_preenchido
     FROM classified WHERE status = 'valid'
     """,
+    memo=True,
 )
 def q_pipeline_fact_inquerito(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP3 fact_inquerito — the central fact from the valid branch
@@ -285,6 +253,7 @@ def q_pipeline_fact_inquerito(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'dim_formacao->dim_grupo_formacao',
            CAST(3 AS BIGINT), CAST(0 AS BIGINT)
     """,
+    memo=True,
 )
 def q_star_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential integrity over the assembled star (dw_creation.sql FK
@@ -441,6 +410,7 @@ _NUMSTR = r"'^[0-9]+(\.[0-9]+)?$|^\.[0-9]+$|^[0-9]+\.$'"
                          WHEN ck % 3 = 1 THEN 0 ELSE -1 END) AS BIGINT)
     FROM v
     """,
+    memo=True,
 )
 def q_pipeline_full_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2+EP3 with EVERY column group (etl_ui.py:245-310, 496-658): the
@@ -478,52 +448,14 @@ def _cfg_fingerprint(cfg: PipelineConfig) -> str:
     )
 
 
-# full-groups twin of _SHARED, keyed additionally by the CONFIG
-# fingerprint (round 11 — VERDICT r10 item 6): mongo_config_pipeline
-# imports a config that is provably equal to _config_full()'s, so both
-# registry entries resolve to ONE persisted classified frame + star —
-# the mongo row had re-run the whole EP2+EP3 chain per bench call for
-# three rounds (8.5 s warm; the only thing it ADDS over
-# pipeline_full_groups is the driver-side document parse).
-_SHARED_FULL: dict[tuple[str, str, str], tuple] = {}
-
-
-#: cap on same-app cache entries (advice r11): distinct (sf_dir,
-#: config-fingerprint) keys are caller-controlled, so without a bound a
-#: long-lived app sweeping many configs would grow persisted-block
-#: memory forever. Expected live set is 1-2 (the driver SF + maybe one
-#: variant); evict the oldest beyond this.
-_SHARED_FULL_MAX = 4
-
-
 def _shared_full(spark: SparkSession, sf_dir: str, cfg: PipelineConfig):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, _cfg_fingerprint(cfg))
-    if key not in _SHARED_FULL:
-        stale = [k for k in _SHARED_FULL if k[0] != app_id]
-        # same-app LRU bound (advice r11): insertion order is access
-        # order enough here — entries are built once and reused
-        same = [k for k in _SHARED_FULL if k[0] == app_id]
-        stale += same[: max(0, len(same) + 1 - _SHARED_FULL_MAX)]
-        if stale:
-            from fefal_etl_spark.plans.star import (
-                release_star_cache,
-                release_star_frames,
-            )
+    """Full-groups twin of `_shared`, keyed additionally by the CONFIG
+    fingerprint: mongo_config_pipeline imports a config provably equal to
+    _config_full()'s, so both registry entries resolve to ONE persisted
+    classified frame + star. Distinct configs are caller-controlled, so
+    the namespace is capped at 4 entries (expected live set: 1-2)."""
 
-            for k in stale:
-                res, star_, pinned = _SHARED_FULL.pop(k)
-                for df_ in [res.frame, *(star_ or {}).values()]:
-                    try:
-                        df_.unpersist()
-                    except Exception:
-                        pass
-                # also the frames build_star persisted for THIS entry
-                # (the EP2 `valid` branch — review r12: without this
-                # the LRU cap did not actually bound persisted memory)
-                release_star_frames(pinned)
-            if any(k[0] != app_id for k in stale):
-                release_star_cache(app_id=app_id)
+    def build():
         res = run_pipeline(
             _survey_full(spark, sf_dir), _registry(spark, sf_dir), cfg
         )
@@ -532,22 +464,21 @@ def _shared_full(spark: SparkSession, sf_dir: str, cfg: PipelineConfig):
             [(7, "Dias úteis")],
             "id_tipo_disp int, descricao_tipo_disp string",
         )
-        from fefal_etl_spark.plans import star as _star_mod
-
-        n0 = len(_star_mod._PERSISTED)
-        # star frames persisted for the same reason as in _shared
-        # (round 12): the full-groups aggregation legs re-derived every
-        # fact from the classified frame per invocation; eviction above
-        # already unpersists star values
         star = {
-            k_: df_.persist()
-            for k_, df_ in build_star(
-                res, tipos_disponibilidades=tipos
-            ).items()
+            k: df.persist()
+            for k, df in build_star(res, tipos_disponibilidades=tipos).items()
         }
-        pinned = [df for _own, df in _star_mod._PERSISTED[n0:]]
-        _SHARED_FULL[key] = (res, star, pinned)
-    return _SHARED_FULL[key][:2]
+        return res, star
+
+    return cache.memo(
+        spark,
+        "pipeline_full",
+        (sf_dir, _cfg_fingerprint(cfg)),
+        build,
+        cap=4,
+        fingerprint=lambda: source_fingerprint(sf_dir, "customer"),
+        frames=_pipeline_frames,
+    )
 
 
 def _full_groups_result(
@@ -557,7 +488,7 @@ def _full_groups_result(
     the body of `pipeline_full_groups`, parameterized on the config so
     `mongo_config_pipeline` can drive the identical plan from an
     imported Mongo document set (and, with an EQUAL config, the
-    identical persisted frame — see _SHARED_FULL)."""
+    identical persisted frame — see _shared_full)."""
     _res, star = _shared_full(spark, sf_dir, cfg)
     fi = star["fact_resposta_interesse"]
     dim_area = star["dim_area_tematica"]
@@ -699,6 +630,7 @@ _register_mongo_config_pipeline()
         ('extend', CAST(4 AS BIGINT), 'zumba')
     ) t(op, id_formacao, nome_formacao)
     """,
+    memo=True,
 )
 def q_star_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7/A5 upsert-dim semantics under the driver gate (etl_ui.py:446-456
@@ -778,6 +710,7 @@ def q_star_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CASE WHEN p THEN 1 ELSE 0 END) AS BIGINT) AS n_promoted
     FROM c3 GROUP BY status
     """,
+    memo=True,
 )
 def q_review_promotions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manual-review loop end-to-end (etl_ui.py:2001-2133): promote every
@@ -840,6 +773,7 @@ _FORM_VALS = {
            CAST(sum(n_formandos) AS BIGINT) AS total_formandos
     FROM long GROUP BY nome_formacao
     """,
+    memo=True,
 )
 def q_pipeline_star_formations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP3 formations bridge fact — R1 unpivot + dim name resolution
@@ -898,6 +832,7 @@ def q_pipeline_star_formations(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s.c_custkey IN (SELECT c_custkey FROM changed)
        OR s.c_custkey NOT IN (SELECT c_custkey FROM base)
     """,
+    memo=True,
 )
 def q_scd2_dim_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 type-2 dimension merge (extends the S7 upsert-dim family with
@@ -967,6 +902,7 @@ def q_scd2_dim_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT order_key, op, CAST(price AS DOUBLE) AS price, ts AS last_ts
     FROM latest WHERE rk = 1 AND op <> 'D'
     """,
+    memo=True,
 )
 def q_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog apply (operators/upsert.py::apply_changelog) — the
@@ -1064,6 +1000,7 @@ def q_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS n_v2
     FROM pit GROUP BY as_of
     """,
+    memo=True,
 )
 def q_scd2_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 time travel (operators/upsert.py::dim_as_of): the same merged

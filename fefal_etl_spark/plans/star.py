@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fefal_etl_spark import cache
 from fefal_etl_spark.functions import extract_content_in_brackets, normalize_text
 from fefal_etl_spark.functions.text import py_extract_brackets, py_normalize_text
 from fefal_etl_spark.operators import (
@@ -39,45 +40,10 @@ from fefal_etl_spark.plans.pipeline import PipelineResult
 
 ID_INQ = "id_inquerito"
 
-# Frames persisted by build_star, tagged with the owning application id so
-# long-lived sessions (bench/oracle loops) can release the blocks instead of
-# accumulating them, and a NEW application can drop entries whose blocks died
-# with a previous context (see plans.queries.release_pipeline_cache).
-_PERSISTED: list[tuple[str, DataFrame]] = []
 
-
-def release_star_frames(frames) -> None:
-    """Unpersist SPECIFIC tracked frames and drop them from the
-    registry — the per-entry release the `_SHARED_FULL` LRU eviction
-    needs (review r12: evicting a cache entry unpersisted only the
-    classified frame; the `valid` branch build_star persists here
-    leaked one fully-persisted EP2 frame per evicted config)."""
-    ids = {id(f) for f in frames}
-    keep: list[tuple[str, DataFrame]] = []
-    for owner, df in _PERSISTED:
-        if id(df) in ids:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        else:
-            keep.append((owner, df))
-    _PERSISTED[:] = keep
-
-
-def release_star_cache(app_id: str | None = None) -> None:
-    """Unpersist tracked star frames — all of them, or (with ``app_id``)
-    only the ones owned by OTHER applications (dead-context cleanup)."""
-    keep: list[tuple[str, DataFrame]] = []
-    for owner, df in _PERSISTED:
-        if app_id is not None and owner == app_id:
-            keep.append((owner, df))
-            continue
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _PERSISTED[:] = keep
+def release_star_cache() -> None:
+    """Unpersist the ``valid`` frames build_star persisted."""
+    cache.release("star")
 
 
 def _upsert(existing, incoming, key, id_col, mode: str):
@@ -111,7 +77,7 @@ def build_star(
     # at 100 TB replace with a checkpoint/staging-table write (cache won't
     # hold the full valid branch).
     valid = result.valid.withColumn(ID_INQ, F.col(ROW_KEY)).persist()
-    _PERSISTED.append((valid.sparkSession.sparkContext.applicationId, valid))
+    cache.put(valid.sparkSession, "star", id(valid), valid, cap=64, frames=[valid])
     out: dict[str, DataFrame] = {}
 
     # --- fact_inquerito (etl_ui.py:404-429) --------------------------------

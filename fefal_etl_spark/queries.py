@@ -14,12 +14,14 @@ not ad-hoc SQL.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fefal_etl_spark import cache
 from fefal_etl_spark.datasets import load_table
 from fefal_etl_spark.functions import (
     encode_existe_responsavel,
@@ -38,6 +40,12 @@ from fefal_etl_spark.operators import (
     resolve_entities,
     with_row_key,
 )
+from fefal_etl_spark.staging import (
+    record_build_seconds,
+    source_fingerprint,
+    stage_table,
+    staging_root,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -45,9 +53,12 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str | None = None, memo: bool = False):
+    """Add a builder to the registry. ``memo=True`` declares its built
+    plan reusable (see ``fefal_etl_spark.cache``, namespace ``plan``)."""
+
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        QUERIES[name] = _memoized(name, fn) if memo else fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -55,201 +66,54 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# --------------------------------------------------------------------------
-# Lazy-plan memoization (round 12, guide §1/§5: the driver should do almost
-# no per-invocation work).
-#
-# Re-invoking a query builder re-runs hundreds of py4j expression
-# constructions and a full analysis pass for a plan that is IDENTICAL call
-# to call — measured 41 s of the 124 s warm bench total at sf0.1 (driver
-# time, before any task runs). A long-lived serving session compiles a
-# query once and re-executes it; the registry now does the same: the built
-# DataFrame (a lazy plan — NO rows, no cached results) is memoized per
-# (application, query, data dir, source fingerprint). Every action against
-# the memoized frame still scans the parquet inputs and recomputes from
-# scratch — the bench's warm pass asserts count equality with the cold
-# pass, and the fingerprint (name/mtime/size of every parquet in the dir)
-# keys regenerated fixtures to a fresh plan.
-#
-# Only queries on the explicit allowlist are memoized. Eligibility was
-# established by a two-stage audit (committed in OPTIMIZATION_r12.md):
-# a static source scan for writes/scenario builds/stream runs, then a
-# dynamic check that the builder's SECOND invocation launches zero Spark
-# jobs (no per-call driver actions whose effects a memo hit would skip).
-# Iterative convergence queries (connected-components family), scenario/
-# sink roundtrips, and streaming queries re-execute their builders
-# unchanged.
-#
-# Builders that persist per-call scratch via cache.track() have those
-# frames re-persisted (same storage level) and re-tracked on every memo
-# hit, so the within-action cache-sharing semantics — and the harness's
-# release_tracked() contract — are exactly as before.
-# --------------------------------------------------------------------------
-
-PLAN_MEMOIZABLE: frozenset = frozenset((
-    "ab_test_ztest", "anti_join_customers", "approx_sketches", "asof_attribution",
-    "asof_forward_tolerance", "audio_frame_energy", "benford_digits",
-    "bigram_logprob", "bloom_prune_join", "bm25_topk", "boolean_retrieval",
-    "bootstrap_ci", "bounce_rate_daily", "bpe_pair_stats", "bracket_extract",
-    "cdc_chunks", "cdc_extract", "cdc_snapshot", "cohort_retention",
-    "conditional_agg_priority", "containment_neardup", "contrastive_pairs",
-    "copurchase_lift", "copurchase_triangles", "countmin_freq", "cube_orders",
-    "curation_pipeline", "customer_spend_quartiles", "customers_above_nation_avg",
-    "decayed_user_value", "decontaminate_overlap", "dedup_keep_best",
-    "disjunctive_bracket_revenue", "distinct_segments", "doc_chunks",
-    "doc_fingerprints", "dormant_customer_balances", "dpp_partition_join",
-    "dq_checks", "dsir_importance",
-    "embedding_covariance", "embedding_hof_stats", "embedding_lsh_pairs",
-    "embedding_neardup", "embedding_quantize", "embedding_topk", "encodings_simnao",
-    "entity_resolution", "event_gaps", "event_path_mining", "event_transitions",
-    "events_gapfill", "events_hourly", "events_interpolate", "events_latency_bands",
-    "events_ohlc", "events_sliding", "events_trend_slope", "ewma_smoothing",
-    "exact_dedup", "excess_stock_suppliers", "first_event_per_type",
-    "forecast_revenue_change", "frame_sample", "full_outer_nation_activity",
-    "funnel_conversion", "funnel_latency", "fuzzy_entity_match", "gap_fill_hourly", "graph_bfs_levels",
-    "gaussian_lsh_recall", "geo_radius_join", "heavy_hitters", "hierarchy_paths",
-    "hll_rollup", "hybrid_skew_revenue", "important_part_values", "incremental_join_view",
-    "incremental_rollup", "intersect_orders", "ivf_assign", "ivf_topk",
-    "json_props_stats", "k_anonymity_audit", "kmeans_assignments", "ks_test_value",
-    "lang_id", "matryoshka_recall", "median_order_value", "merge_into_orders",
-    "min_cost_supplier", "minhash_jaccard_sources", "minhash_neardup",
-    "multi_distinct_order_stats", "multimodal_decode", "multimodal_features",
-    "multimodal_resize", "nation_market_share", "ngram_jaccard_pairs",
-    "normalize_text", "null_imputation", "null_semantics_suite", "order_analytics",
-    "order_count_distribution", "order_priority_check", "pagerank_trade_graph",
-    "paginated_orders", "pareto_orders", "pct_rescale", "per_source_cap",
-    "perplexity_buckets", "pii_scrub", "pipeline_fact_inquerito", "pipeline_full_groups",
-    "pipeline_star_formations", "pipeline_status_accounting", "pivot_order_priority",
-    "pmi_collocations", "png_decode", "positional_index", "ppjoin_pairs",
-    "prefix_theta_join", "price_histogram", "pricing_summary", "product_type_profit",
-    "promo_revenue_share", "purchase_attribution_join", "purchase_attribution_outer",
-    "quality_rank_blend", "quality_zscores", "quantile_normalize", "quantile_sketch_audit",
-    "quantized_rerank_topk", "range_join_windows", "repetition_filter",
-    "returned_item_customers", "revenue_by_nation", "review_promotions",
-    "rfm_segments", "rolling_distinct_users", "rolling_revenue_90d",
-    "rollup_lineitem", "rrf_fusion", "salted_join_revenue", "scalar_suite",
-    "scd2_as_of", "scd2_dim_merge", "seasonal_decompose", "segment_dedup",
-    "semdedup_pairs", "semi_join_customers", "sentence_explode", "sequence_packing",
-    "session_funnel", "session_windows_native", "sessionize", "set_ops_suite",
-    "shipping_priority", "simhash_fingerprints", "skyline_parts", "sparse_cosine_pairs",
-    "sparse_cosine_topk", "star_idempotent_reload", "star_integrity",
-    "status_fork_counts", "stratified_sample", "substring_dedup_rewrite",
-    "substring_dup_spans", "supplier_variety", "suppliers_kept_waiting",
-    "table_diff", "table_profile", "temperature_resample", "text_stats",
-    "tfidf_top_terms", "time_weighted_avg", "token_diversity", "tombstone_cascade",
-    "top_orders", "top_supplier_revenue", "top_volume_orders", "train_test_split",
-    "training_shards", "unigram_logprob", "union_except", "unpivot_measures",
-    "user_event_type_sets", "validate_numeric", "value_outliers_mad",
-    "value_winsorize", "vocab_coverage", "volume_shipping", "weighted_sample",
-    "window_topk", "zipf_fit", "zorder_layout",
-))
-
-_PLAN_MEMO: dict = {}
-
-
-def clear_plan_memo() -> None:
-    """Drop every memoized plan (tests / fixture regeneration)."""
-    _PLAN_MEMO.clear()
-
-
-def _dir_fingerprint(sf_dir: str):
-    """(name, mtime_ns, size) of every parquet file in the dir — a ~0.1 ms
-    driver stat pass that keys the memo to the exact source bytes. A
-    ``*.parquet`` DIRECTORY source (partitioned layout) is walked file by
-    file (VERDICT r12 minor #6: stat-ing only the dir entry would miss an
-    in-place rewrite of a file inside it)."""
-    import os as _os
-
-    try:
-        parts = []
-        with _os.scandir(sf_dir) as it:
-            for e in it:
-                if not e.name.endswith(".parquet"):
-                    continue
-                if e.is_dir():
-                    for root, _dirs, files in _os.walk(e.path):
-                        for fn in files:
-                            st = _os.stat(_os.path.join(root, fn))
-                            parts.append(
-                                (
-                                    _os.path.relpath(
-                                        _os.path.join(root, fn), sf_dir
-                                    ),
-                                    st.st_mtime_ns,
-                                    st.st_size,
-                                )
-                            )
-                else:
-                    st = e.stat()
-                    parts.append((e.name, st.st_mtime_ns, st.st_size))
-        return tuple(sorted(parts))
-    except OSError:
-        return None
-
-
 def _memoized(name: str, fn: QueryFn) -> QueryFn:
-    if name not in PLAN_MEMOIZABLE:
-        return fn
-
-    import functools
-
-    from fefal_etl_spark.cache import track, tracking_scope
-
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (
-            spark.sparkContext.applicationId,
-            name,
-            os.path.abspath(sf_dir),
-            _dir_fingerprint(sf_dir),
+        built = []
+
+        def build():
+            built.append(True)
+            with cache.tracking_scope() as frames:
+                df = fn(spark, sf_dir)
+                # keep the scratch persisted past the scope: tracked below
+                captured = frames[:]
+                frames.clear()
+            return df, [(f, f.storageLevel) for f in captured]
+
+        df, persists = cache.memo(
+            spark,
+            "plan",
+            (name, os.path.abspath(sf_dir)),
+            build,
+            cap=1024,
+            fingerprint=lambda: source_fingerprint(sf_dir),
+            frames=lambda v: [f for f, _level in v[1]],
         )
-        hit = _PLAN_MEMO.get(key)
-        if hit is not None:
-            df, persists = hit
-            for frame, level in persists:
+        for frame, level in persists:  # in the CALLER's tracking context
+            if not built:
                 frame.persist(level)
-                track(frame)
-            return df
-        with tracking_scope() as frames:
-            df = fn(spark, sf_dir)
-            captured = list(frames)
-            # keep them persisted: hand them to the CALLER's tracking
-            # context instead of letting the scope exit unpersist them
-            frames.clear()
-        persists = [(f, f.storageLevel) for f in captured]
-        for f in captured:
-            track(f)
-        _PLAN_MEMO[key] = (df, persists)
+            cache.track(frame)
         return df
 
+    run.memo = True
     return run
 
 
-# (application, sf_dir, fingerprint) -> collected max(o_orderkey). Nine
-# scenario builders derived a threshold from this one scalar with a
-# per-INVOCATION collect — one extra Spark job per call each (VERDICT r12
-# item 7). The value parameterizes predicate STRINGS and scenario builds,
-# so it cannot be folded into the lazy plan like the BFS seed; instead it
-# is collected once per (session, source bytes) and reused — later
-# invocations are zero-job. The fingerprint keys regenerated fixtures to
-# a fresh collect.
-_ORDERS_MAX_MEMO: dict = {}
-
-
 def _orders_max_key(spark: SparkSession, sf_dir: str) -> int:
-    key = (
-        spark.sparkContext.applicationId,
+    """max(o_orderkey), collected once per (session, source bytes): nine
+    scenario builders derive a threshold from it that parameterizes
+    predicate STRINGS and scenario builds, so it cannot be folded into
+    the lazy plan; later invocations are zero-job."""
+    return cache.memo(
+        spark,
+        "orders_max",
         os.path.abspath(sf_dir),
-        _dir_fingerprint(sf_dir),
+        lambda: load_table(spark, sf_dir, "orders")
+        .agg(F.max("o_orderkey").alias("m"))
+        .collect()[0]["m"],
+        cap=64,
+        fingerprint=lambda: source_fingerprint(sf_dir, "orders"),
     )
-    v = _ORDERS_MAX_MEMO.get(key)
-    if v is None:
-        v = _ORDERS_MAX_MEMO[key] = (
-            load_table(spark, sf_dir, "orders")
-            .agg(F.max("o_orderkey").alias("m"))
-            .collect()[0]["m"]
-        )
-    return v
 
 
 # --------------------------------------------------------------------------
@@ -310,6 +174,7 @@ def decsum(col: str) -> F.Column:
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
+    memo=True,
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped aggregation with predicate pushdown (SURVEY §2.4 grouped agg).
@@ -366,6 +231,7 @@ _ENTITY_PROBE_SQL = f"""
       ON {sql_strip_prefixes('p.nome_entidade')} || '||' || {sql_norm('p.tipo_entidade')}
          = r.entity_key
     """,
+    memo=True,
 )
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 — resolve noisy entity names (prefix + accents + case + whitespace)
@@ -417,6 +283,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY row_number() OVER (
         PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) = 1
     """,
+    memo=True,
 )
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 — one best row per key (etl_ui.py:201-213 semantics)."""
@@ -446,6 +313,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n
     FROM ranked GROUP BY 1
     """,
+    memo=True,
 )
 def q_status_fork_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 fork — valid/duplicate/unmatched accounting (etl_ui.py:109-125,
@@ -479,6 +347,7 @@ _MEASURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
             FROM lineitem WHERE {m} IS NOT NULL"""
         for m in _MEASURES
     ),
+    memo=True,
 )
 def q_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1 — unpivot lineitem measures to long form then aggregate per measure
@@ -512,6 +381,7 @@ def q_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE CAST(p AS INTEGER) END AS pct
     FROM c CROSS JOIN m
     """,
+    memo=True,
 )
 def q_pct_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1+A2+P7 — negatives→NULL then rescale to 0-100 by the global max
@@ -539,6 +409,7 @@ def q_pct_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders) t
     WHERE rk <= 3
     """,
+    memo=True,
 )
 def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via ranking window (SURVEY §2.5 exposed family)."""
@@ -567,6 +438,7 @@ def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(CASE WHEN gap <= 0 THEN NULL ELSE gap END AS BIGINT) AS gap_s
     FROM g
     """,
+    memo=True,
 )
 def q_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag() analytic + F13 duration semantics (≤0 → NULL;
@@ -643,6 +515,7 @@ def q_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE json_extract_string(props, '$.k') IS NOT NULL
     GROUP BY event_type, k_decile
     """,
+    memo=True,
 )
 def q_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured JSON column (§2.9 array/map/JSON surface):
@@ -678,6 +551,7 @@ def q_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            c.click_event_id, c.ts AS click_ts
     FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
     """,
+    memo=True,
 )
 def q_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (last-touch attribution): each purchase gets the user's
@@ -722,6 +596,7 @@ def q_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN w ON e.ts >= w.w_start AND e.ts < w.w_end
     GROUP BY w.window_id
     """,
+    memo=True,
 )
 def q_range_join_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join: events bucketed into overlapping 5-day promo windows
@@ -759,6 +634,7 @@ def q_range_join_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(DISTINCT event_type) AS BIGINT) AS n_types
     FROM events GROUP BY user_id
     """,
+    memo=True,
 )
 def q_user_event_type_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array aggregation (collect_set) with deterministic ordering:
@@ -791,6 +667,7 @@ def q_user_event_type_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT g.user_id, g.hour, CAST(coalesce(b.n, 0) AS BIGINT) AS n
     FROM grid g LEFT JOIN b ON b.user_id = g.user_id AND b.h = g.hour
     """,
+    memo=True,
 )
 def q_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap fill (resample-to-grid): per user, every hour between
@@ -844,6 +721,7 @@ def q_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_events
     FROM sess GROUP BY user_id, session_seq
     """,
+    memo=True,
 )
 def q_session_windows_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native `session_window` (30-min inactivity gap) — the built-in that
@@ -886,6 +764,7 @@ def q_session_windows_native(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(ts) AS session_start, max(ts) AS session_end
     FROM sess GROUP BY user_id, session_seq
     """,
+    memo=True,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (30-min inactivity gap) via lag + running sum — the
@@ -918,6 +797,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY row_number() OVER (
         PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
     """,
+    memo=True,
 )
 def q_first_event_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicates-with-order semantics: earliest event per (user, type)
@@ -953,6 +833,7 @@ def q_first_event_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) t
     GROUP BY ws, event_type
     """,
+    memo=True,
 )
 def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (2h length, 1h slide): each event lands in
@@ -977,6 +858,7 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
            {DECSUM.format(x='value')} AS sum_value
     FROM events GROUP BY 1, 2
     """,
+    memo=True,
 )
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time window aggregation — same plan Structured
@@ -1005,6 +887,7 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT ALL
     SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F'
     """,
+    memo=True,
 )
 def q_union_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1 unionByName + U2 exceptAll (etl_ui.py:2050-2060 semantics)."""
@@ -1021,6 +904,7 @@ def q_union_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey, c_name FROM customer c
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
+    memo=True,
 )
 def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 — left-anti join: keys absent from the other side
@@ -1040,6 +924,7 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey FROM customer c
     WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
+    memo=True,
 )
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """left_semi join (SURVEY §2.3 exposed-for-free family)."""
@@ -1053,6 +938,7 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "distinct_segments",
     "SELECT DISTINCT c_mktsegment, c_nationkey FROM customer",
+    memo=True,
 )
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — DISTINCT (etl_ui.py:1463, 2010)."""
@@ -1066,6 +952,7 @@ def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_custkey, o_totalprice FROM orders
     ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
     """,
+    memo=True,
 )
 def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1+O2 — multi-key sort + limit (etl_ui.py:205, 864). Spark plans this
@@ -1094,6 +981,7 @@ def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.r_name = 'ASIA' AND o.o_orderstatus = 'F'
     GROUP BY n.n_name
     """,
+    memo=True,
 )
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-shape multi-join: the 100 TB stress shape — one genuinely
@@ -1143,6 +1031,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
+    memo=True,
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (SURVEY §2.4 exposed family)."""
@@ -1163,6 +1052,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM customer) t
     WHERE c_acctbal > nation_avg
     """,
+    memo=True,
 )
 def q_customers_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-subquery shape (`WHERE x > (SELECT avg ... same group)`)
@@ -1194,6 +1084,7 @@ def q_customers_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS BIGINT) AS low
     FROM orders GROUP BY o_orderstatus
     """,
+    memo=True,
 )
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT (long→wide) — the inverse of the R1–R4 unpivots. Explicit value
@@ -1226,6 +1117,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n
     FROM orders GROUP BY o_orderpriority
     """,
+    memo=True,
 )
 def q_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles (median + p90) per group — Spark's `percentile`
@@ -1278,6 +1170,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n
     FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
+    memo=True,
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets (SURVEY §2.4 exposed family): all 4 grouping
@@ -1311,6 +1204,7 @@ _RAW_SIMNAO = """CASE WHEN value > 66 THEN 'Sim'
            CAST(count(*) AS BIGINT) AS n
     FROM n GROUP BY 1, 2, 3
     """,
+    memo=True,
 )
 def q_encodings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8/F9/F10 — the three sim/não encodings, including the deliberate
@@ -1346,6 +1240,7 @@ _RAW_NUM_SPARK = _RAW_NUM.replace("VARCHAR", "STRING")
            regexp_matches(trim(raw), '^[0-9]+(\\.[0-9]+)?$|^\\.[0-9]+$|^[0-9]+\\.$') AS is_num
     FROM t
     """,
+    memo=True,
 )
 def q_validate_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F16 validate_numeric (clamp ≥0, garbage→0; etl_ui.py:227-232) and
@@ -1374,6 +1269,7 @@ _RAW_BRACKET = """CASE WHEN p_size % 3 = 0 THEN '[' || p_brand || '] extra'
                 ELSE trim(raw) END AS extracted
     FROM t
     """,
+    memo=True,
 )
 def q_bracket_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 — bracket extraction with whole-string fallback (etl_ui.py:57-62),
@@ -1393,6 +1289,7 @@ def q_bracket_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
            {sql_strip_prefixes("'Câmara Municipal de ' || c_name")} AS stripped
     FROM customer
     """,
+    memo=True,
 )
 def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1+F2 — normalize_text and entity-prefix strip (etl_ui.py:322-331,
@@ -1435,6 +1332,7 @@ _SENTENCED = (
     FROM (SELECT doc_id, unnest(parts) AS p FROM s) t
     WHERE trim(p) <> ''
     """,
+    memo=True,
 )
 def q_sentence_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R5 — sentence split + explode with the reference regex's semantics
@@ -1470,6 +1368,7 @@ def q_sentence_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN tipos t
       ON {sql_norm('a.colname')} LIKE {sql_norm("t.descricao_tipo_disp || ' -'")} || '%'
     """,
+    memo=True,
 )
 def q_prefix_theta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 — availability-type prefix theta-join (etl_ui.py:613-621):
@@ -1512,6 +1411,7 @@ def q_prefix_theta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS n_orders_90d
     FROM orders
     """,
+    memo=True,
 )
 def q_rolling_revenue_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-based RANGE frame (SURVEY §2.5 frame specs): per customer, each
@@ -1559,6 +1459,7 @@ def q_rolling_revenue_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored) t
     WHERE rk = 1 AND dist <= 2
     """,
+    memo=True,
 )
 def q_fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy entity resolution — the edit-distance fallback stage J1's exact
@@ -1618,6 +1519,7 @@ def q_fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
     """,
+    memo=True,
 )
 def q_order_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking + analytic + frame-spec window family (SURVEY §2.5 exposed
@@ -1652,6 +1554,7 @@ def q_order_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_totalprice FROM orders
     ORDER BY o_totalprice DESC, o_orderkey LIMIT 50 OFFSET 100
     """,
+    memo=True,
 )
 def q_paginated_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4 — offset+limit pagination over a total order (etl_ui.py:999-1000
@@ -1672,6 +1575,7 @@ def q_paginated_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
     """,
+    memo=True,
 )
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT set op (SURVEY §2.7 exposed family)."""
@@ -1691,7 +1595,6 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a content-addressed staging table (fefal_etl_spark.staging:
     fingerprint of the source parquet in the path, atomic publish)."""
     from fefal_etl_spark.sources.readers import read_csv
-    from fefal_etl_spark.staging import source_fingerprint, stage_table
 
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
@@ -1724,8 +1627,6 @@ def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce the table exactly. Explicit schema (never inferSchema at
     scale: inference is a full extra pass over the data). The JSONL copy is
     a content-addressed staging table (fefal_etl_spark.staging)."""
-    from fefal_etl_spark.staging import source_fingerprint, stage_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -1749,8 +1650,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet): parquet→ORC→read must reproduce the table exactly. Same
     pushdown/pruning machinery as parquet. Content-addressed staging
     table (fefal_etl_spark.staging)."""
-    from fefal_etl_spark.staging import source_fingerprint, stage_table
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -1775,8 +1674,6 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     practice: the table is written `partitionBy(o_orderstatus)` once, and
     the status filter prunes to ONE directory before any IO (shows up as
     PartitionFilters in the scan, not a row filter)."""
-    from fefal_etl_spark.staging import source_fingerprint, stage_table
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
@@ -1812,6 +1709,7 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderstatus = 'O'
     GROUP BY o_orderpriority
     """,
+    memo=True,
 )
 def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-salted equi-join (docs/SCALE.md salting pattern, operators.skew):
@@ -1854,6 +1752,7 @@ def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(n_supp, 0) AS n_supp
     FROM c FULL OUTER JOIN s ON c.nk = s.nk
     """,
+    memo=True,
 )
 def q_full_outer_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join (SURVEY §2.3 exposed-for-free family): reconcile two
@@ -1893,6 +1792,7 @@ def q_full_outer_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) t
     GROUP BY c_count
     """,
+    memo=True,
 )
 def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: LEFT OUTER join with an ON-clause-only predicate
@@ -1930,6 +1830,7 @@ def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l_orderkey
     LIMIT 10
     """,
+    memo=True,
 )
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective filters on all three tables are pushed to
@@ -1976,6 +1877,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN orders o ON t.l_orderkey = o.o_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
     """,
+    memo=True,
 )
 def q_top_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: aggregate-then-semi-filter (HAVING over a big
@@ -2014,6 +1916,7 @@ def q_top_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(list_filter(v, x -> x > 0)) AS BIGINT) AS n_pos
     FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) e
     """,
+    memo=True,
 )
 def q_embedding_hof_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions (SURVEY §2.9 array surface): per-row
@@ -2099,6 +2002,7 @@ def q_bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY o_orderpriority
     """,
+    memo=True,
 )
 def q_multi_distinct_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple DISTINCT aggregates in one groupBy (SURVEY §2.4 exposed
@@ -2128,6 +2032,7 @@ def q_multi_distinct_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate <  TIMESTAMP '1997-01-01'
     GROUP BY l_returnflag
     """,
+    memo=True,
 )
 def q_conditional_agg_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional aggregation — CASE WHEN folded INSIDE
@@ -2169,6 +2074,7 @@ def q_conditional_agg_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) t
     WINDOW w AS (ORDER BY spend DESC, c_custkey)
     """,
+    memo=True,
 )
 def q_customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-ranking window family (SURVEY §2.5 exposed ranking ops):
@@ -2208,6 +2114,7 @@ def q_customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS DECIMAL(24,4))), 6) AS DOUBLE) AS promo_share_pct
     FROM lineitem JOIN part ON l_partkey = p_partkey
     """,
+    memo=True,
 )
 def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: broadcast the small dim (part) into the fact scan,
@@ -2242,6 +2149,7 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part JOIN lineitem ON l_partkey = p_partkey
     WHERE p_size >= 20 GROUP BY p_brand
     """,
+    memo=True,
 )
 def q_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (adapted: no partsupp table in the testdata):
@@ -2435,21 +2343,22 @@ def q_xls_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fefal_etl_spark.sources.readers import read_xls
     from fefal_etl_spark.sources.xls_fixture import nation_xls_bytes
 
-    path = _XLS_FIXTURE.get("path")
-    if path is None or not os.path.exists(path):
+    def write() -> str:
         path = os.path.join(tempfile.mkdtemp(prefix="fefal_xls_"), "nation.xls")
         with open(path, "wb") as f:
             f.write(nation_xls_bytes())
-        _XLS_FIXTURE["path"] = path
+        return path
+
+    path = cache.memo(spark, "xls_fixture", "nation", write, cap=1)
+    if not os.path.exists(path):  # removed by a tmp cleaner: write afresh
+        cache.release("xls_fixture")
+        path = cache.memo(spark, "xls_fixture", "nation", write, cap=1)
     back = read_xls(spark, path, sheet_name="nation")
     return back.select(
         F.col("n_nationkey").try_cast("long").alias("n_nationkey"),
         "n_name",
         F.col("n_regionkey").try_cast("long").alias("n_regionkey"),
     )
-
-
-_XLS_FIXTURE: dict[str, str] = {}
 
 
 @register(
@@ -2514,6 +2423,7 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS hll_ok, TRUE AS sketch_ok, TRUE AS pctl_ok
     FROM orders GROUP BY o_orderpriority
     """,
+    memo=True,
 )
 def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate-aggregation surface: HyperLogLog++ count-distinct
@@ -2604,6 +2514,7 @@ _SUITE_NUM = """CASE WHEN p_size % 4 = 0 THEN 'garbage'
            try_cast({_SUITE_NUM} AS DOUBLE) AS num
     FROM t
     """,
+    memo=True,
 )
 def q_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5/F6/F7/F14/F15/F18/F19 + X1 in one pass (SURVEY §2.9/§2.10):
@@ -2674,6 +2585,7 @@ def q_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 'union', k FROM (SELECT k FROM a UNION SELECT k FROM b) t
     """,
+    memo=True,
 )
 def q_set_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1/U2/INTERSECT/A4 in one tagged relation (etl_ui.py:2050-2060 set
@@ -2734,7 +2646,6 @@ def _txn_scenario(
     import os
     import shutil
 
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
     from fefal_etl_spark.table import TransactionalTable
 
     root = os.path.join(
@@ -2743,8 +2654,6 @@ def _txn_scenario(
     t = TransactionalTable(spark, root)
     if t.latest_version() != final_version:
         import time as _time
-
-        from fefal_etl_spark.staging import record_build_seconds
 
         shutil.rmtree(root, ignore_errors=True)
         t = TransactionalTable(spark, root)
@@ -3006,7 +2915,6 @@ def q_incremental_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from fefal_etl_spark.materialized import IncrementalAggView
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
     from fefal_etl_spark.table import TransactionalTable
 
     root = os.path.join(
@@ -4402,7 +4310,6 @@ def q_catalog_named_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         TxnTableBatchDataSource,
     )
     from fefal_etl_spark.sql_dml import execute_sql
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
     from fefal_etl_spark.table import TransactionalTable
 
     spark.dataSource.register(TxnTableBatchDataSource)
@@ -4499,7 +4406,6 @@ def q_sql_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fefal_etl_spark.catalog import TableCatalog
     from fefal_etl_spark.sql_dml import execute_sql
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
 
     wh = os.path.join(
         staging_root(),
@@ -4597,7 +4503,6 @@ def q_sql_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fefal_etl_spark.catalog import TableCatalog
     from fefal_etl_spark.sql_dml import execute_sql
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
 
     wh = os.path.join(
         staging_root(),
@@ -4694,7 +4599,6 @@ def q_sql_maintenance_verbs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fefal_etl_spark.catalog import TableCatalog
     from fefal_etl_spark.sql_dml import execute_sql
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
 
     wh = os.path.join(
         staging_root(),
@@ -5414,7 +5318,6 @@ def q_incremental_mv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from fefal_etl_spark.materialized import IncrementalAggView
-    from fefal_etl_spark.staging import source_fingerprint, staging_root
     from fefal_etl_spark.table import TransactionalTable
 
     root = os.path.join(
@@ -5542,9 +5445,7 @@ def get_queries() -> dict[str, QueryFn]:
     import fefal_etl_spark.plans.queries  # noqa: F401
     import fefal_etl_spark.tpch_queries  # noqa: F401
 
-    return _driver_order(
-        {name: _memoized(name, fn) for name, fn in QUERIES.items()}
-    )
+    return _driver_order(dict(QUERIES))
 
 
 def get_oracles() -> dict[str, str]:
@@ -5577,6 +5478,7 @@ def get_oracles() -> dict[str, str]:
     FROM t
     GROUP BY pri
     """,
+    memo=True,
 )
 def q_null_semantics_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL-semantics parity pin (SURVEY §2.2 P6 family, engine-wide
@@ -5640,6 +5542,7 @@ def _sql_morton(a: str, b: str, bits: int = 16) -> str:
            CAST(min(b) AS BIGINT) AS b_min, CAST(max(b) AS BIGINT) AS b_max
     FROM z GROUP BY z_bucket
     """,
+    memo=True,
 )
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-layout optimization (operators/layout.py::zorder_stats): the
@@ -5691,6 +5594,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'clerk', count(*), count(*) - count(clerk),
            count(DISTINCT clerk), min(clerk), max(clerk) FROM t
     """,
+    memo=True,
 )
 def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ — column-level ingest profile (operators/quality.py::
@@ -5717,77 +5621,63 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared co-purchase staging frames: the distinct (order, part) relation and
-# the pair-count table feed BOTH graph queries (triangles, lift) — built and
-# persisted once per (applicationId, sf_dir), same pattern and staleness
-# rules as plans/queries._SHARED (id-keyed caches can serve dead sessions).
-_COPURCHASE: dict[tuple[str, str], tuple] = {}
-
-
 def _copurchase_frames(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COPURCHASE:
-        for k in [k for k in _COPURCHASE if k[0] != key[0]]:
-            for f in _COPURCHASE.pop(k):
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-        li = (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-            .persist()
-        )
-        a, b = li.alias("a"), li.alias("b")
-        # persist the SUPPORT-FILTERED pair table (thousands of rows), not
-        # the raw one (~10⁶): an InMemoryRelation's size statistic is the
-        # unfiltered cache, which blocks auto-broadcast in every consumer
-        # join downstream (measured: triangles 4.6 s → 7.3 s with the raw
-        # cache, back under 2 s with the filtered one). The expensive
-        # self-join+agg still runs exactly once, at materialization.
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-            )
-            .groupBy(
-                F.col("a.l_partkey").alias("src"),
-                F.col("b.l_partkey").alias("dst"),
-            )
-            .agg(F.count(F.lit(1)).alias("w"))
-            .filter(F.col("w") >= 2)
-            .persist()
-        )
-        # round 12: the per-item marginals and the distinct-order count
-        # are derived once alongside the frames they come from — the
-        # lift query otherwise re-ran an aggregation pass AND a
-        # countDistinct expand over the ~corpus-sized li cache on every
-        # invocation for the same two tiny frames
-        item = (
-            li.groupBy("l_partkey")
-            .agg(F.count(F.lit(1)).alias("n_item"))
-            .persist()
-        )
-        n_orders = li.agg(
-            F.countDistinct("l_orderkey").alias("__n_orders")
-        ).persist()
-        _COPURCHASE[key] = (li, pairs, item, n_orders)
-    return _COPURCHASE[key]
+    """The distinct (order, part) relation, the pair-count table and
+    their marginals, shared by BOTH graph queries (triangles, lift):
+    built and persisted once per (application, sf_dir, lineitem bytes)."""
+    return cache.memo(
+        spark,
+        "copurchase",
+        sf_dir,
+        lambda: _build_copurchase(spark, sf_dir),
+        cap=4,
+        fingerprint=lambda: source_fingerprint(sf_dir, "lineitem"),
+        frames=lambda frames: frames,
+    )
 
 
-def release_copurchase_cache() -> None:
-    """Free the persisted co-purchase staging frames — the
-    `release_pipeline_cache` analogue for long-lived sessions (the cache
-    is otherwise application-lifetime; in short-lived bench/oracle runs
-    the context teardown frees it)."""
-    for k in list(_COPURCHASE):
-        for f in _COPURCHASE.pop(k):
-            try:
-                f.unpersist()
-            except Exception:
-                pass
+def _build_copurchase(spark: SparkSession, sf_dir: str):
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+        .persist()
+    )
+    a, b = li.alias("a"), li.alias("b")
+    # persist the SUPPORT-FILTERED pair table (thousands of rows), not
+    # the raw one (~10⁶): an InMemoryRelation's size statistic is the
+    # unfiltered cache, which blocks auto-broadcast in every consumer
+    # join downstream (measured: triangles 4.6 s → 7.3 s with the raw
+    # cache, back under 2 s with the filtered one). The expensive
+    # self-join+agg still runs exactly once, at materialization.
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(
+            F.col("a.l_partkey").alias("src"),
+            F.col("b.l_partkey").alias("dst"),
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+        .persist()
+    )
+    # round 12: the per-item marginals and the distinct-order count
+    # are derived once alongside the frames they come from — the
+    # lift query otherwise re-ran an aggregation pass AND a
+    # countDistinct expand over the ~corpus-sized li cache on every
+    # invocation for the same two tiny frames
+    item = (
+        li.groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("n_item"))
+        .persist()
+    )
+    n_orders = li.agg(
+        F.countDistinct("l_orderkey").alias("__n_orders")
+    ).persist()
+    return li, pairs, item, n_orders
 
 
 @register(
@@ -5816,6 +5706,7 @@ def release_copurchase_cache() -> None:
            CAST(count(*) AS BIGINT) AS n_triangles
     FROM corners GROUP BY 1
     """,
+    memo=True,
 )
 def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics — per-part triangle counts on the frequent
@@ -5848,6 +5739,7 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(c) AS lo_units, max(c) AS hi_units
     FROM c CROSS JOIN mm GROUP BY 1
     """,
+    memo=True,
 )
 def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ — exact 20-bucket equi-width histogram of l_extendedprice
@@ -5905,6 +5797,7 @@ def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM checks UNION ALL SELECT * FROM pk
     """,
+    memo=True,
 )
 def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ — declarative constraint suite (operators/quality.py::dq_checks,
@@ -5966,6 +5859,7 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rank AS INT) AS rank
     FROM r WHERE rank <= 10
     """,
+    memo=True,
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew diagnosis (operators/skew.py::heavy_hitters) — the audit that
@@ -5992,6 +5886,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(value) AS max_value
     FROM events GROUP BY event_type
     """,
+    memo=True,
 )
 def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warehouse maintenance — incremental rollup refresh
@@ -6059,8 +5954,6 @@ def q_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Footer merging is a driver-side metadata operation (cost ∝ file
     count, not data); at 100 TB pin the canonical schema in a metastore
     and pass it explicitly instead of re-inferring per read."""
-    from fefal_etl_spark.staging import source_fingerprint, stage_table
-
     orders = load_table(spark, sf_dir, "orders")
     fp = source_fingerprint(sf_dir, "orders")
     b1 = stage_table(
@@ -6116,6 +6009,7 @@ def q_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM wm w JOIN mad d USING (event_type)
     WHERE abs(w.value - w.m) > 3.0 * 1.4826 * d.md
     """,
+    memo=True,
 )
 def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V54 — robust per-group outlier gate by Median Absolute Deviation:
@@ -6169,6 +6063,7 @@ def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY p.ts LIMIT 1
     ) m ON TRUE
     """,
+    memo=True,
 )
 def q_asof_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of join with tolerance — each view matched to the user's
@@ -6217,6 +6112,7 @@ def q_asof_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type, hour
     """,
+    memo=True,
 )
 def q_events_latency_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percentile bands per (type, hour) — the SLO dashboard aggregation
@@ -6262,6 +6158,7 @@ def q_events_latency_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (t.o_orderkey IS NOT NULL AND s.o_orderkey IS NOT NULL
                AND s.o_orderstatus = 'F')
     """,
+    memo=True,
 )
 def q_merge_into_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V63 — general MERGE INTO (operators/upsert.py::merge_into), the
@@ -6313,6 +6210,7 @@ def q_merge_into_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            (e.value < b.p01 OR e.value > b.p99) AS clipped
     FROM events e JOIN bounds b USING (event_type)
     """,
+    memo=True,
 )
 def q_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group winsorization — clip each value into its group's
@@ -6365,6 +6263,7 @@ def q_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     WHERE best_earlier IS NULL OR o_totalprice > best_earlier
     """,
+    memo=True,
 )
 def q_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D Pareto frontier (skyline): open orders not dominated in
@@ -6483,6 +6382,7 @@ def q_event_type_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE
     FROM events
     """,
+    memo=True,
 )
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-sketch rollup — THE 100 TB distinct-count pattern: one
@@ -6543,6 +6443,7 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            group_size < 5 AS below_k
     FROM grouped
     """,
+    memo=True,
 )
 def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V70 — k-anonymity audit over quasi-identifiers (nation × market
@@ -6590,6 +6491,7 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) FILTER (WHERE in_a AND in_b AND NOT same) AS BIGINT) AS changed
     FROM j
     """,
+    memo=True,
 )
 def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V72 — snapshot reconciliation (data-diff): two versions of a table
@@ -6682,6 +6584,7 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cust_id, supp_id, dist_km
     FROM cand WHERE dist_km <= 50.0
     """,
+    memo=True,
 )
 def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V74 — spatial radius join via grid bucketing: points snapped to
@@ -6771,6 +6674,7 @@ def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lift DESC, item_a, item_b
     LIMIT 25
     """,
+    memo=True,
 )
 def q_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V75 — association-rule scoring (market-basket): support/confidence/
@@ -6837,6 +6741,7 @@ def q_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR NOT (t.o_totalprice IS NOT DISTINCT FROM s.o_totalprice
                AND t.o_orderstatus IS NOT DISTINCT FROM s.o_orderstatus)
     """,
+    memo=True,
 )
 def q_cdc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V77 — changefeed extraction, the inverse of `cdc_snapshot`: diff two
@@ -6909,6 +6814,7 @@ def q_cdc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(n * sxx - sx * sx AS DOUBLE), 9) AS slope_per_hour
     FROM moments
     """,
+    memo=True,
 )
 def q_events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V78 — per-group least-squares trend slope (is traffic growing?):
@@ -6951,6 +6857,7 @@ def q_events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
+    memo=True,
 )
 def q_hybrid_skew_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V79 — hybrid hot-key isolation join (operators/skew.py::
@@ -7012,6 +6919,7 @@ def q_hybrid_skew_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * (1.0 / n0 + 1.0 / n1)), 0), 6) AS z_score
     FROM wide
     """,
+    memo=True,
 )
 def q_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V81 — two-proportion z-test over a deterministic hash-bucketed A/B
@@ -7086,6 +6994,7 @@ def q_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
+    memo=True,
 )
 def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V84 — incremental maintenance of a JOIN view: the materialized
@@ -7151,6 +7060,7 @@ def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
            (p.qty IS NULL) AS was_imputed
     FROM planted p JOIN meds m ON p.l_returnflag = m.l_returnflag
     """,
+    memo=True,
 )
 def q_null_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V85 — per-group median imputation: planted NULLs (orderkey % 97)
@@ -7203,6 +7113,7 @@ def q_null_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
                      - log10(1.0 + 1.0 / digit)), 6) AS abs_dev
     FROM digits GROUP BY digit
     """,
+    memo=True,
 )
 def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V89 — Benford's-law leading-digit audit over order totals: observed
@@ -7265,6 +7176,7 @@ def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND (q.pr < p.pr OR q.sz < p.sz)
     )
     """,
+    memo=True,
 )
 def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V94 — skyline / Pareto-frontier operator (Börzsönyi et al., ICDE
@@ -7363,6 +7275,7 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(pow(1 - exp(-3.0 * n_build / 2048), 3), 6) AS fpr_expected
     FROM agg
     """,
+    memo=True,
 )
 def q_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V96 — Bloom-filter semi-join pruning with a portable bitset:
@@ -7484,6 +7397,7 @@ def q_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.quarter = '1995-Q2'
     GROUP BY f.o_month
     """,
+    memo=True,
 )
 def q_dpp_partition_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V100 — dynamic partition pruning, demonstrated as data: the orders
@@ -7503,8 +7417,6 @@ def q_dpp_partition_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the same join over the flat table, proving pruning is
     semantically invisible. Sum is DECIMAL-exact before the final double
     cast."""
-    from fefal_etl_spark.staging import source_fingerprint, stage_table
-
     monthly = load_table(spark, sf_dir, "orders").select(
         "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -39,12 +40,19 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fefal_etl_spark import cache
+
 # Wall-clock seconds spent BUILDING staged tables / scenarios in this
 # process, keyed by staged name ("scenario:<name>" for _txn_scenario
 # builds). bench.py snapshots the running total around each cold
 # invocation so one-time build cost is attributable separately from
 # first-execution cost (VERDICT r12 "own the cold number").
 _BUILD_SECONDS: dict[str, float] = {}
+
+
+#: name suffix of a session-scoped staged dir: ``-s`` + 8 hex digits of
+#: the owning application id (see ``stage_table(scope="session")``)
+_SESSION_SUFFIX = re.compile(r"-s[0-9a-f]{8}$")
 
 
 def record_build_seconds(name: str, seconds: float) -> None:
@@ -73,8 +81,15 @@ def staging_root() -> str:
 
 def source_fingerprint(sf_dir: str, *tables: str) -> str:
     """md5 over (relative name, size, mtime_ns) of every file under each
-    ``<sf_dir>/<table>.parquet`` (file or directory). Regenerated source
-    data ⇒ different fingerprint ⇒ different staging path."""
+    ``<sf_dir>/<table>.parquet`` (file or directory); with no table names,
+    under every ``*.parquet`` entry of ``sf_dir``. Regenerated source
+    data ⇒ different fingerprint ⇒ different staging path and memo key.
+    I/O errors (an unlistable ``sf_dir``, a file vanishing mid-walk)
+    propagate: a staging path needs a real key."""
+    if not tables:
+        tables = tuple(
+            e[: -len(".parquet")] for e in os.listdir(sf_dir) if e.endswith(".parquet")
+        )
     parts: list[str] = []
     for table in tables:
         path = os.path.join(sf_dir, f"{table}.parquet")
@@ -134,9 +149,8 @@ def stage_table(
         for d in os.listdir(root):
             if (
                 d.startswith(f"{name}-")
-                and "-s" in d
+                and _SESSION_SUFFIX.search(d)
                 and not d.endswith(f"-s{app}")
-                and ".tmp-" not in d
             ):
                 full = os.path.join(root, d)
                 try:
@@ -145,7 +159,14 @@ def stage_table(
                 except OSError:
                     continue
     final = os.path.join(staging_root(), f"{name}-{fingerprint}")
-    if not os.path.exists(os.path.join(final, "_SUCCESS")):
+    if os.path.exists(os.path.join(final, "_SUCCESS")):
+        # a hit keeps the dir young, so a session that lives longer than
+        # the sweep's age guard never loses its staged tables to another
+        try:
+            os.utime(final)
+        except OSError:
+            pass
+    else:
         # A final dir without _SUCCESS is debris from a crashed publisher
         # under the OLD non-atomic scheme or a partial copy — clear it so
         # the rename can land. (Atomic rename means current-version crashes
@@ -165,10 +186,8 @@ def stage_table(
         # sessions only: an age guard spares a concurrent session's
         # in-progress .tmp-* write (deleting it mid-write would fail
         # that session's job — the opposite of the benign-race contract)
-        import time as _time
-
         root = staging_root()
-        now = _time.time()
+        now = time.time()
         for d in os.listdir(root):
             if d.startswith(f"{name}-") and ".tmp-" in d:
                 full = os.path.join(root, d)
@@ -179,14 +198,6 @@ def stage_table(
                 if age > 3600:
                     shutil.rmtree(full, ignore_errors=True)
     return final
-
-
-# (application-id, staged path) -> read DataFrame. spark.read.parquet
-# re-lists the directory and re-reads footers on every call (~0.3-0.4 s
-# of driver time per staged table per query invocation at sf0.1); the
-# staged path is content-addressed and its files immutable once
-# published, so the read plan can be built once per session and reused.
-_READ_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def stage_parquet(
@@ -208,8 +219,6 @@ def stage_parquet(
         frame.write.mode("overwrite").parquet(p)
 
     path = stage_table(spark, name, fingerprint, _write, scope=scope)
-    key = (spark.sparkContext.applicationId, path)
-    out = _READ_MEMO.get(key)
-    if out is None:
-        out = _READ_MEMO[key] = spark.read.parquet(path)
-    return out
+    return cache.memo(
+        spark, "staged_read", path, lambda: spark.read.parquet(path), cap=256
+    )

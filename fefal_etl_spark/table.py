@@ -50,27 +50,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fefal_etl_spark import cache
+
 _MANIFEST_RE = re.compile(r"^manifest-(\d+)\.json$")
-
-#: footer-inferred parquet schema per (table root, commit dir) — commit
-#: dirs are uuid-addressed and written exactly once, so their physical
-#: schema is immutable for the life of the process. Consumed by
-#: `_read_files` to build readers with an explicit schema (skipping
-#: per-call footer inference) and to prove the single-reader fast path
-#: safe. Entries are a few hundred bytes each; vacuumed commits simply
-#: leave dead keys behind.
-_COMMIT_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-# Lazy READ-PLAN memo (round 12): data files under a commit dir are
-# uuid-addressed and write-once, so an identical (file list, dv list,
-# column ops, declared schema, with_pos) request over the same root is
-# an identical lazy plan — rebuilding it cost a few hundred ms of
-# driver/py4j work on every snapshot read of an unchanged table. The
-# memo stores ONLY analyzed plans (no rows; every action still scans
-# the parquet bytes), is keyed by application so a restarted session
-# never sees a dead session's frames, and is bounded FIFO.
-_READ_PLAN_MEMO: dict[tuple, object] = {}
-_READ_PLAN_MEMO_MAX = 256
 
 #: "parameter not passed" sentinel for _commit(partition_spec=...):
 #: None is a MEANINGFUL value there (reset to never-declared — restore
@@ -783,36 +765,40 @@ class TransactionalTable:
         zero extra shuffle of the data. ``with_pos`` keeps the
         ``__dv_file``/``__dv_pos`` helper columns for callers that need
         row addresses (the DV writer itself)."""
-        from pyspark.sql import functions as F
-
-        need_meta = with_pos or bool(dv_files)
-        root_abs = os.path.abspath(self.root)
-        memo_key = (
-            self.spark.sparkContext.applicationId,
-            root_abs,
+        key = (
+            os.path.abspath(self.root),
             tuple(files),
             tuple(dv_files or ()),
             with_pos,
             tuple(tuple(op) for op in (column_ops or ())),
             tuple(sorted((recorded_schema or {}).items())),
         )
-        hit = _READ_PLAN_MEMO.get(memo_key)
-        if hit is not None:
-            return hit
+        return cache.memo(
+            self.spark,
+            "read_plan",
+            key,
+            lambda: self._scan_files(
+                files, dv_files, with_pos, column_ops, recorded_schema
+            ),
+            cap=256,
+        )
+
+    def _scan_files(
+        self, files, dv_files, with_pos, column_ops, recorded_schema
+    ) -> DataFrame:
+        from pyspark.sql import functions as F
+
+        need_meta = with_pos or bool(dv_files)
+        root_abs = os.path.abspath(self.root)
         prefix = "file:" + root_abs + "/"
         groups: dict[str, list[str]] = {}
         for f in files:  # group order = manifest order (deterministic)
             commit = "/".join(f.split("/")[:2])  # data/<uuid>
             groups.setdefault(commit, []).append(f)
-        # Per-commit parquet schemas are immutable (commit dirs are
-        # uuid-addressed, written once), so the footer-inferred schema is
-        # memoized per (table root, commit dir): reader creation with an
-        # explicit schema skips footer inference + a py4j analysis round
-        # trip (measured ~180 ms → ~70 ms per group at sf0.1, and the
-        # fast path below collapses G group readers into one). Pure
-        # metadata reuse — every action still scans the parquet files.
+        # the fast path below collapses G group readers into one
         cached = {
-            c: _COMMIT_SCHEMA_CACHE.get((root_abs, c)) for c in groups
+            c: cache.peek(self.spark, "commit_schema", (root_abs, c))
+            for c in groups
         }
         hive = any(
             "=" in seg for f in files for seg in f.split("/")[2:-1]
@@ -853,7 +839,13 @@ class TransactionalTable:
                     *[os.path.join(self.root, f) for f in fs]
                 )
                 if known is None:
-                    _COMMIT_SCHEMA_CACHE[(root_abs, commit)] = df.schema
+                    cache.put(
+                        self.spark,
+                        "commit_schema",
+                        (root_abs, commit),
+                        df.schema,
+                        cap=4096,
+                    )
                 if need_meta:
                     df = df.select(
                         "*",
@@ -939,12 +931,6 @@ class TransactionalTable:
                     return F.col(f"`{c}`")
 
                 out = out.select(*[col_of(c) for c in order])
-        if len(_READ_PLAN_MEMO) >= _READ_PLAN_MEMO_MAX:
-            try:  # FIFO evict; plans are cheap to rebuild on a miss
-                _READ_PLAN_MEMO.pop(next(iter(_READ_PLAN_MEMO)))
-            except (KeyError, StopIteration, RuntimeError):
-                pass
-        _READ_PLAN_MEMO[memo_key] = out
         return out
 
     def read(self, version: int | None = None) -> DataFrame:

@@ -55,6 +55,7 @@ def _rev(price="l_extendedprice", disc="l_discount") -> F.Column:
             AND l_shipdate > o_orderdate + INTERVAL 120 DAY)
     GROUP BY o_orderpriority
     """,
+    memo=True,
 )
 def q_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape — EXISTS correlated subquery (late-line orders per
@@ -96,6 +97,7 @@ def q_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
+    memo=True,
 )
 def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 — the canonical predicate-pushdown query: no join, every
@@ -146,6 +148,7 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) shipping
     GROUP BY supp_nation, cust_nation, l_year
     """,
+    memo=True,
 )
 def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape — multi-join with an OR-of-nation-pairs predicate and
@@ -222,6 +225,7 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) all_nations
     GROUP BY o_year
     """,
+    memo=True,
 )
 def q_nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape — market share of one supplier nation inside one
@@ -292,6 +296,7 @@ def q_nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
+    memo=True,
 )
 def q_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape — lost-revenue ranking: wide (4-column) group key,
@@ -348,6 +353,7 @@ def q_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rv
     WHERE value_dec * 1000 > (SELECT SUM(value_dec) FROM rv)
     """,
+    memo=True,
 )
 def q_important_part_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape — per-group value filtered against a *global* scalar
@@ -406,6 +412,7 @@ def q_important_part_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier JOIN revenue ON s_suppkey = supplier_no
     WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
     """,
+    memo=True,
 )
 def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape — derived revenue view consumed twice: once joined
@@ -455,6 +462,7 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 20 AND 30)
     """,
+    memo=True,
 )
 def q_disjunctive_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape — three OR'd conjunction brackets mixing build-side
@@ -512,6 +520,7 @@ def q_disjunctive_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY numwait DESC, s_name
     LIMIT 10
     """,
+    memo=True,
 )
 def q_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape — the hardest join topology in the suite: a base set
@@ -600,6 +609,7 @@ def q_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o_orderdate >= TIMESTAMP '1999-01-01')
     GROUP BY cust_group
     """,
+    memo=True,
 )
 def q_dormant_customer_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape — above-average-balance customers with no *recent*
@@ -667,6 +677,7 @@ def q_dormant_customer_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
                        WHERE c2.partkey = p_partkey)
     ORDER BY p_partkey, s_suppkey
     """,
+    memo=True,
 )
 def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape — correlated MIN subquery whose correlation runs over
@@ -767,6 +778,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM heavy WHERE heavy.l_suppkey = s_suppkey)
     ORDER BY s_name
     """,
+    memo=True,
 )
 def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape — nested subquery chain collapsed into semi-joins:
@@ -828,6 +840,7 @@ def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) profit_rows
     GROUP BY nation, o_year
     """,
+    memo=True,
 )
 def q_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape — product-type profit by supplier nation and order

@@ -227,45 +227,52 @@ def test_upsert_idempotent_with_null_keys(spark):
 
 def test_shared_cache_keyed_by_application_id(spark):
     """Two-sequential-sessions simulation (VERDICT r2 item 5): entries keyed
-    by a DEAD application id must be evicted (and their frames unpersisted)
-    the first time a new application populates the cache — id(spark) reuse
+    by a DEAD application id must be dropped (and their frames unpersisted)
+    the first time the live application stores an entry — id(spark) reuse
     after GC can no longer serve a stale persisted frame."""
     from types import SimpleNamespace
 
+    from fefal_etl_spark import cache
     from fefal_etl_spark.plans import queries as pq
-    from fefal_etl_spark.plans import star as pstar
 
-    pq.release_pipeline_cache()
+    cache.release("pipeline")
+    cache.release("star")
     app_id = spark.sparkContext.applicationId
+    dead = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="dead-app-123"))
 
     released = []
     dead_frame = SimpleNamespace(unpersist=lambda: released.append("pipeline"))
-    pq._SHARED[("dead-app-123", "/some/sf")] = (
-        SimpleNamespace(frame=dead_frame),
-        {},
+    cache.memo(
+        dead,
+        "pipeline",
+        "/some/sf",
+        lambda: (SimpleNamespace(frame=dead_frame), {}),
+        cap=4,
+        frames=pq._pipeline_frames,
     )
     live_star = SimpleNamespace(unpersist=lambda: released.append("BUG-live"))
     dead_star = SimpleNamespace(unpersist=lambda: released.append("star"))
-    pstar._PERSISTED.append((app_id, live_star))
-    pstar._PERSISTED.append(("dead-app-123", dead_star))
+    cache.put(dead, "star", "dead", dead_star, cap=64, frames=[dead_star])
+    cache.put(spark, "star", "live", live_star, cap=64, frames=[live_star])
 
     try:
         res, star = pq._shared(spark, "/root/testdata/sf0.001")
         # the dead application's entries are gone and were unpersisted …
-        assert ("dead-app-123", "/some/sf") not in pq._SHARED
+        assert ("dead-app-123", "/some/sf") not in cache.keys("pipeline")
+        assert ("dead-app-123", "dead") not in cache.keys("star")
         assert sorted(released) == ["pipeline", "star"]
         # … the live application's are intact, and the fresh entry is keyed
         # by the real application id
-        assert any(df is live_star for _own, df in pstar._PERSISTED)
-        assert (app_id, "/root/testdata/sf0.001") in pq._SHARED
+        assert (app_id, "live") in cache.keys("star")
+        assert (app_id, "/root/testdata/sf0.001") in cache.keys("pipeline")
         # a second lookup is a pure cache hit (same objects back)
+        hits = cache.counts("pipeline")[0]
         res2, star2 = pq._shared(spark, "/root/testdata/sf0.001")
         assert res2 is res and star2 is star
+        assert cache.counts("pipeline")[0] == hits + 1
     finally:
-        pstar._PERSISTED[:] = [
-            (o, d) for o, d in pstar._PERSISTED if d is not live_star
-        ]
-        pq.release_pipeline_cache()
+        cache.release("pipeline")
+        cache.release("star")
 
 
 def test_from_mongo_docs_imports_reference_shapes(tmp_path):

@@ -224,10 +224,8 @@ def test_plant_headroom_guard(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from fefal_etl_spark.llm.queries import (
-        _NS_MAX_MEMO,
-        _assert_plant_headroom,
-    )
+    from fefal_etl_spark import cache
+    from fefal_etl_spark.llm.queries import _assert_plant_headroom
 
     ok_dir = tmp_path / "ok"
     bad_dir = tmp_path / "bad"
@@ -247,8 +245,10 @@ def test_plant_headroom_guard(spark, tmp_path):
     with pytest.raises(ValueError, match="namespace collision"):
         _assert_plant_headroom(spark, str(bad_dir), "documents", "doc_id")
     # memoized: second probe of the same key does not re-read
-    key = (os.path.abspath(str(bad_dir)), "documents", "doc_id")
-    assert _NS_MAX_MEMO[key] == 1_000_000
+    hits, misses = cache.counts("ns_max")
+    with pytest.raises(ValueError, match="= 1000000 reaches"):
+        _assert_plant_headroom(spark, str(bad_dir), "documents", "doc_id")
+    assert cache.counts("ns_max") == (hits + 1, misses)
 
 
 # ----------------------------------------------------------------------

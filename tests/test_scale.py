@@ -237,6 +237,48 @@ def test_registry_smj_whitelist_and_no_row_python(spark):
     assert not offenders, f"unwhitelisted SortMergeJoin in: {offenders}"
 
 
+#: memo=True builders whose raw rebuild may launch jobs that only list an
+#: immutable staged dir (Spark's parallel partition discovery over the 80
+#: month partitions) — a memo hit skips nothing but the listing
+RAW_REBUILD_JOBS_OK = {"dpp_partition_join"}
+
+
+def test_memo_queries_rebuild_with_zero_jobs(spark):
+    """Memo eligibility gate for every ``@register(..., memo=True)`` builder
+    at sf0.001: built a second time inside a job group, the memoized entry
+    launches zero Spark jobs and hands back the same frame object, and so
+    does the raw builder — a builder with a per-call driver action (whose
+    effect a memo hit would skip) fails here."""
+    from fefal_etl_spark.cache import release_tracked
+    from fefal_etl_spark.queries import get_queries
+
+    sc = spark.sparkContext
+    sf = "/root/testdata/sf0.001"
+    memo = {n: fn for n, fn in get_queries().items() if getattr(fn, "memo", False)}
+    assert len(memo) == 196, "the memo=True set changed: re-audit it here"
+
+    def jobs_of(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            out = build(spark, sf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs, fresh = {}, []
+    for name, fn in memo.items():
+        first = fn(spark, sf)
+        again, hit_jobs = jobs_of(f"memo-hit-{name}", fn)
+        _raw, raw_jobs = jobs_of(f"memo-raw-{name}", fn.__wrapped__)
+        release_tracked()
+        if hit_jobs or (raw_jobs and name not in RAW_REBUILD_JOBS_OK):
+            jobs[name] = (hit_jobs, raw_jobs)
+        if again is not first:
+            fresh.append(name)
+    assert not jobs, f"second builds that launched Spark jobs (hit, raw): {jobs}"
+    assert not fresh, f"memo hits that rebuilt the plan: {fresh}"
+
+
 def test_round3_plans_no_python_no_cartesian(spark):
     """Round-3 plan-shape regression: none of the new query families may
     regress into row-at-a-time Python or a cartesian product, the
